@@ -25,6 +25,29 @@
  * so parity holds by construction; the differential tests in
  * tests/test_fastscan.py verify token-by-token and error-by-error.
  *
+ * Fused tree builder (fused_build): for udfs.parse_turn's markup
+ * extraction the same records also drive a C port of the Python tree
+ * builder (kernel/treebuilder.py) on a per-call PyMem arena.  It covers
+ * every HTML-namespace insertion mode the Python builder has — initial,
+ * before-html, head, head-noscript, body, text, table, table text,
+ * caption, table body, row, cell, select, select-in-table, template,
+ * after-body, after-after-body — with the adoption agency algorithm
+ * (Noah's Ark clause included), foster parenting and reconstruction of
+ * active formatting elements, and returns (extracted text, spans, node
+ * count) with the error texts in the Python order; no Python Node is
+ * created.  It bails, handing the records to the Python builder as a
+ * FastFeed (one scan per input), on:
+ *   - an <svg> or <math> start tag (foreign content), "tree-foreign";
+ *   - a document-mode IN_HEAD <meta> (the §13.2.3.5 re-encode
+ *     handshake), "tree-meta";
+ *   - <frameset>, "tree-frameset";
+ *   - a fragment context whose Python build does not start in IN_BODY
+ *     (table parts, select, head, template), "tree-context".
+ * The Python builder stays: it is the only path for the inputs above
+ * and for scanner bails, and it is the oracle the differential tests
+ * compare against.  HP_FASTSCAN=0 turns off the scanner and the fused
+ * builder together.
+ *
  * This file is written against the *Python* kernel in this repository
  * (kernel/tokenizer.py), which itself documents behavioral citations
  * into the reference C tokenizer.  It is NOT a port of the reference:
@@ -58,6 +81,7 @@
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
 #include <structmember.h>
+#include <setjmp.h>
 #include <string.h>
 
 /* token types (kernel/tokenizer.py) */
@@ -1737,74 +1761,75 @@ scan_all(Scan *sc)
 }
 
 /* ------------------------------------------------------------------ */
-/* module API                                                          */
+/* scan driver + feed construction (shared by make_feed and the fused  */
+/* builder's hand-over on a tree bail)                                 */
 /* ------------------------------------------------------------------ */
 
 static const char *last_bail = NULL;
 
-static PyObject *
-make_feed(PyObject *Py_UNUSED(mod), PyObject *args)
+/* Scan `text` into sc->rb.  Returns 0 accepted, 1 scanner bail
+   (sc->bail set, records freed), -1 python error (records freed). */
+static int
+scan_text(Scan *sc, PyObject *text, PyObject *decode_fn)
 {
-    PyObject *text, *errors, *decode_fn = NULL;
-    if (!PyArg_ParseTuple(args, "UO|O", &text, &errors, &decode_fn))
-        return NULL;
-    if (PyUnicode_READY(text) < 0)
-        return NULL;
-
-    Scan sc = {0};
-    sc.text = text;
-    sc.kind = PyUnicode_KIND(text);
-    sc.data = PyUnicode_DATA(text);
-    sc.n = PyUnicode_GET_LENGTH(text);
-    sc.decode_fn = (decode_fn && decode_fn != Py_None) ? decode_fn
-                                                       : NULL;
-    sc.interns = PyDict_New();
-    if (!sc.interns) return NULL;
-    sc.lc_line = 1;
-    sc.lc_col = 1;
-
-    int rc = scan_all(&sc);
-    Py_DECREF(sc.interns);
-    Py_CLEAR(sc.pending_errs);  /* set-then-bail leaves a remnant */
+    memset(sc, 0, sizeof(*sc));
+    sc->text = text;
+    sc->kind = PyUnicode_KIND(text);
+    sc->data = PyUnicode_DATA(text);
+    sc->n = PyUnicode_GET_LENGTH(text);
+    sc->decode_fn = (decode_fn && decode_fn != Py_None) ? decode_fn : NULL;
+    sc->interns = PyDict_New();
+    if (!sc->interns) return -1;
+    sc->lc_line = 1;
+    sc->lc_col = 1;
+    int rc = scan_all(sc);
+    Py_DECREF(sc->interns);
+    Py_CLEAR(sc->pending_errs);  /* set-then-bail leaves a remnant */
     if (rc != 0) {
-        recbuf_clear(&sc.rb);
-        PyMem_Free(sc.skips);
-        if (rc < 0) return NULL;
-        last_bail = sc.bail;
-        Py_RETURN_NONE;
+        recbuf_clear(&sc->rb);
+        PyMem_Free(sc->skips);
+        sc->skips = NULL;
     }
-    last_bail = NULL;
+    return rc;
+}
 
+/* Wrap an accepted scan's records in a FastFeed.  Takes ownership of
+   the records and skip ranges in every case. */
+static PyObject *
+feed_from_scan(Scan *sc, PyObject *text, PyObject *errors)
+{
     /* the skipped list the Python tokenizer exposes (appended there
        per raw-scan invocation; the feed is pre-tokenized, so it is
        complete up front — nothing reads it mid-stream) */
-    PyObject *skipped = PyList_New(sc.n_skips);
+    PyObject *skipped = PyList_New(sc->n_skips);
     if (!skipped) {
-        recbuf_clear(&sc.rb);
-        PyMem_Free(sc.skips);
+        recbuf_clear(&sc->rb);
+        PyMem_Free(sc->skips);
         return NULL;
     }
-    for (Py_ssize_t k = 0; k < sc.n_skips; k++) {
-        PyObject *pair = Py_BuildValue("(nn)", sc.skips[k].a,
-                                       sc.skips[k].b);
+    for (Py_ssize_t k = 0; k < sc->n_skips; k++) {
+        PyObject *pair = Py_BuildValue("(nn)", sc->skips[k].a,
+                                       sc->skips[k].b);
         if (!pair) {
             Py_DECREF(skipped);
-            recbuf_clear(&sc.rb);
-            PyMem_Free(sc.skips);
+            recbuf_clear(&sc->rb);
+            PyMem_Free(sc->skips);
             return NULL;
         }
         PyList_SET_ITEM(skipped, k, pair);
     }
-    PyMem_Free(sc.skips);
-    sc.skips = NULL;
+    PyMem_Free(sc->skips);
+    sc->skips = NULL;
 
     FastFeed *f = PyObject_New(FastFeed, &FastFeed_Type);
-    if (!f) { recbuf_clear(&sc.rb); Py_DECREF(skipped); return NULL; }
+    if (!f) { recbuf_clear(&sc->rb); Py_DECREF(skipped); return NULL; }
     /* null every pointer first so dealloc is safe on partial init */
     f->text = NULL; f->raw_tag = NULL; f->errors = NULL;
     f->skipped = NULL; f->scratch = NULL;
-    f->recs = sc.rb.recs;       /* ownership moves */
-    f->n = sc.rb.n;
+    f->recs = sc->rb.recs;      /* ownership moves */
+    f->n = sc->rb.n;
+    sc->rb.recs = NULL;
+    sc->rb.n = sc->rb.cap = 0;
     f->i = 0;
     f->state = S_DATA;
     f->allow_cdata = 0;
@@ -1832,6 +1857,2566 @@ make_feed(PyObject *Py_UNUSED(mod), PyObject *args)
 }
 
 static PyObject *
+make_feed(PyObject *Py_UNUSED(mod), PyObject *args)
+{
+    PyObject *text, *errors, *decode_fn = NULL;
+    last_bail = NULL;
+    if (!PyArg_ParseTuple(args, "UO|O", &text, &errors, &decode_fn))
+        return NULL;
+    if (PyUnicode_READY(text) < 0)
+        return NULL;
+    Scan sc;
+    int rc = scan_text(&sc, text, decode_fn);
+    if (rc < 0) return NULL;
+    if (rc > 0) {
+        last_bail = sc.bail;
+        Py_RETURN_NONE;
+    }
+    return feed_from_scan(&sc, text, errors);
+}
+
+/* ------------------------------------------------------------------ */
+/* fused tree builder (subset and bails: see the file header)          */
+/*                                                                     */
+/* A port of kernel/treebuilder.py driven directly by the TokRecs.     */
+/* Each helper names the TreeBuilder method it mirrors; the order of   */
+/* checks, the error texts and the reference deviations kept there are */
+/* kept here — a change to one builder needs the same change in the   */
+/* other (tools/fuzz_diff.py --fused compares them).  Out-of-memory,   */
+/* Python errors and bails unwind through TB.fail (longjmp): all the   */
+/* builder owns lives in TB, which tb_free releases on every path.     */
+/* ------------------------------------------------------------------ */
+
+#define FB_STACK_MAX 256      /* treebuilder.STACK_MAX */
+#define FB_FMT_MAX 64         /* treebuilder.FMT_MAX */
+#define FB_TMODE_MAX 64       /* treebuilder.TEMPLATE_MODE_MAX */
+
+/* every tag name the builder tests; anything else is TAG_OTHER and
+   compares by string */
+#define TAG_LIST(X) \
+    X(a) X(address) X(applet) X(area) X(article) X(aside) X(b) X(base) \
+    X(basefont) X(bgsound) X(big) X(blockquote) X(body) X(br) X(button) \
+    X(caption) X(center) X(code) X(col) X(colgroup) X(content) X(dd) \
+    X(details) X(dir) X(div) X(dl) X(dt) X(em) X(embed) X(fieldset) \
+    X(figcaption) X(figure) X(font) X(footer) X(form) X(frame) \
+    X(frameset) X(h1) X(h2) X(h3) X(h4) X(h5) X(h6) X(head) X(header) \
+    X(hgroup) X(hr) X(html) X(i) X(iframe) X(img) X(input) X(li) X(link) \
+    X(listing) X(main) X(marquee) X(math) X(menu) X(meta) X(nav) X(nobr) \
+    X(noembed) X(noframes) X(noscript) X(object) X(ol) X(optgroup) \
+    X(option) X(p) X(param) X(plaintext) X(pre) X(rb) X(rp) X(rt) X(rtc) \
+    X(s) X(script) X(section) X(select) X(small) X(source) X(strike) \
+    X(strong) X(style) X(summary) X(svg) X(table) X(tbody) X(td) \
+    X(template) X(textarea) X(tfoot) X(th) X(thead) X(title) X(tr) \
+    X(track) X(tt) X(u) X(ul) X(wbr) X(xmp)
+
+enum {
+    TAG_OTHER = 0,
+#define X(n) TAG_##n,
+    TAG_LIST(X)
+#undef X
+    TAG_COUNT
+};
+
+static const char *TAG_STR[TAG_COUNT] = {
+    "",
+#define X(n) #n,
+    TAG_LIST(X)
+#undef X
+};
+
+/* tag-set flags: each mirrors one treebuilder.py / foreign.py set */
+#define F_FMT          (1u << 0)   /* FMT_TAGS */
+#define F_EOF_EXPECTED (1u << 1)   /* _EOF_EXPECTED */
+#define F_IMPLIED      (1u << 2)   /* _IMPLIED_END */
+#define F_IMPLIED_ALL  (1u << 3)   /* _IMPLIED_END_THOROUGH */
+#define F_SCOPING      (1u << 4)   /* _SCOPING (== foreign.HTML_SCOPING) */
+#define F_LI_SCOPING   (1u << 5)   /* _LIST_ITEM_SCOPING */
+#define F_BTN_SCOPING  (1u << 6)   /* _BUTTON_SCOPING */
+#define F_TBL_SCOPING  (1u << 7)   /* _TABLE_SCOPING */
+#define F_HEAD_EL      (1u << 8)   /* _HEAD_ELEMENTS */
+#define F_NOSCRIPT_EL  (1u << 9)   /* _HEAD_NOSCRIPT_ELEMENTS */
+#define F_TMPL_HEAD    (1u << 10)  /* _TEMPLATE_HEAD_ELEMENTS */
+#define F_VOID         (1u << 11)  /* _VOID_ELEMENTS */
+#define F_TABLE_EL     (1u << 12)  /* _TABLE_ELEMENTS */
+#define F_SECTION      (1u << 13)  /* _TABLE_SECTIONS */
+#define F_CELL         (1u << 14)  /* _CELLS */
+#define F_FOSTER       (1u << 15)  /* _FOSTER_TARGETS */
+#define F_BODY_IGNORED (1u << 16)  /* _BODY_IGNORED_START */
+#define F_BLOCK_LIKE   (1u << 17)  /* _BLOCK_LIKE */
+#define F_HEADING      (1u << 18)  /* _HEADINGS */
+#define F_SPECIAL      (1u << 19)  /* foreign.HTML_SPECIAL */
+
+static const struct { unsigned flag; const char *names; } TAG_SETS[] = {
+    {F_FMT, "a b big code em font i nobr s small strike strong tt u"},
+    {F_EOF_EXPECTED, "dd dt li optgroup option p rb rp rt rtc tbody td "
+                     "tfoot th thead tr body html"},
+    {F_IMPLIED, "dd dt li optgroup option p rb rp rt rtc"},
+    {F_IMPLIED_ALL, "dd dt li optgroup option p rb rp rt rtc caption "
+                    "colgroup tbody td tfoot th thead tr"},
+    {F_SCOPING, "applet caption html table td th marquee object template"},
+    {F_LI_SCOPING, "applet caption html table td th marquee object "
+                   "template ol ul"},
+    {F_BTN_SCOPING, "applet caption html table td th marquee object "
+                    "template button"},
+    {F_TBL_SCOPING, "html table template"},
+    {F_HEAD_EL, "base link meta style noscript template title script"},
+    {F_NOSCRIPT_EL, "basefont bgsound link meta noframes style"},
+    {F_TMPL_HEAD, "base basefont bgsound link meta noframes noscript "
+                  "script style template title"},
+    {F_VOID, "area base br col embed hr img input link meta param source "
+             "track wbr"},
+    {F_TABLE_EL, "table tbody thead tfoot tr td th caption colgroup col"},
+    {F_SECTION, "tbody thead tfoot"},
+    {F_CELL, "td th"},
+    {F_FOSTER, "table tbody tfoot thead tr"},
+    {F_BODY_IGNORED, "caption col colgroup frame head tbody td tfoot th "
+                     "thead tr"},
+    {F_BLOCK_LIKE, "address article aside blockquote div dl fieldset "
+                   "footer form h1 h2 h3 h4 h5 h6 header hr main nav ol p "
+                   "plaintext pre section table ul"},
+    {F_HEADING, "h1 h2 h3 h4 h5 h6"},
+    {F_SPECIAL, "address applet area article aside base basefont "
+                "blockquote body br button caption center col colgroup dd "
+                "details dir div dl dt embed fieldset figcaption figure "
+                "footer form frame frameset h1 h2 h3 h4 h5 h6 head header "
+                "hgroup hr html iframe img input li link listing main "
+                "marquee menu meta nav noembed noframes noscript object ol "
+                "p param plaintext pre script section select source style "
+                "summary table tbody td template textarea tfoot th thead "
+                "title tr track ul wbr xmp"},
+};
+
+static unsigned TAG_FLAGS[TAG_COUNT];
+static PyObject *TAG_NAME[TAG_COUNT];   /* str per tag id */
+static PyObject *TAG_IDS;               /* dict: str -> int tag id */
+
+#define HAS(tag, f) ((TAG_FLAGS[(tag)] & (f)) != 0)
+
+/* tree-builder error texts (bare, unpositioned) */
+#define ERR_LIST(X) \
+    X(E_BEFORE_TEMPLATE, "unexpected-element-before-template") \
+    X(E_AAA_MISMATCH, "aaa-implied-mismatch") \
+    X(E_AAA_SCOPE, "adoption-agency-1.1") \
+    X(E_STRAY_DOCTYPE, "stray-doctype") \
+    X(E_EOF_TEMPLATE, "eof-in-template") \
+    X(E_START_TAG, "unexpected-start-tag") \
+    X(E_FOSTER, "foster-parenting") \
+    X(E_EOF_TEXT, "eof-in-text") \
+    X(E_NS_DOCTYPE, "stray-doctype-in-head-noscript") \
+    X(E_NS_CHAR, "char-in-head-noscript") \
+    X(E_NS_START, "unexpected-start-tag-in-head-noscript") \
+    X(E_NS_BR, "end-tag-br-in-head-noscript") \
+    X(E_NS_END, "unexpected-end-tag-in-head-noscript") \
+    X(E_NS_EOF, "eof-in-head-noscript") \
+    X(E_EOF_DOCTYPE, "eof-before-doctype") \
+    X(E_EOF_OPEN, "eof-with-open-elements") \
+    X(E_EOF_TABLE, "eof-in-table") \
+    X(E_NO_DOCTYPE, "missing-doctype") \
+    X(E_START_IN_TABLE, "unexpected-start-tag-in-table") \
+    X(E_START_IN_SELECT, "unexpected-start-tag-in-select") \
+    X(E_END_TAG, "unexpected-end-tag") \
+    X(E_END_UNCLOSED, "end-tag-with-unclosed-elements") \
+    X(E_AFTER_BODY, "unexpected-token-after-body")
+
+enum {
+#define X(id, s) id,
+    ERR_LIST(X)
+#undef X
+    E_COUNT
+};
+static const char *ERR_STR[E_COUNT] = {
+#define X(id, s) s,
+    ERR_LIST(X)
+#undef X
+};
+static PyObject *ERR_OBJ[E_COUNT];
+static PyObject *KEY_START, *KEY_END, *KEY_PATH;
+
+/* insertion modes (treebuilder.py order) and dispatch outcomes */
+enum { M_INITIAL, M_BEFORE_HTML, M_IN_HEAD, M_IN_HEAD_NOSCRIPT, M_IN_BODY,
+       M_IN_TABLE, M_IN_TABLE_TEXT, M_IN_ROW, M_IN_CELL, M_IN_TABLE_BODY,
+       M_IN_CAPTION, M_IN_SELECT, M_IN_SELECT_IN_TABLE, M_IN_TEMPLATE,
+       M_TEXT, M_AFTER_BODY, M_AFTER_AFTER_BODY };
+enum { A_NONE = -1, A_BREAK = 0, A_CHECK, A_REPROCESS, A_STOP };
+enum { DM_NO_QUIRKS, DM_LIMITED_QUIRKS, DM_QUIRKS };
+
+enum { N_DOCUMENT, N_DOCTYPE, N_ELEMENT, N_TEXT, N_COMMENT };
+
+typedef struct FNode {
+    struct FNode *parent, *first, *last, *prev, *next;
+    PyObject *name;     /* ELEMENT: tag name (borrowed) */
+    PyObject *data;     /* TEXT: character data (borrowed) */
+    PyObject *attrs;    /* ELEMENT: attr list (borrowed), NULL == [] */
+    short tag;
+    unsigned char type;
+    unsigned char in_stack;   /* Node.in_stack */
+} FNode;
+
+#define ARENA_BLOCK 512
+typedef struct ArenaBlock {
+    struct ArenaBlock *next;
+    int used;
+    FNode nodes[ARENA_BLOCK];
+} ArenaBlock;
+
+/* active formatting entry: marker <=> el == NULL */
+typedef struct { FNode *el; short tag; PyObject *name; } FmtEntry;
+
+/* the token being dispatched (a TokRec view, or EOF) */
+typedef struct {
+    int type;
+    short tag;
+    PyObject *name, *data, *attrs;
+    int self_closing;
+    TokRec *rec;
+} FTok;
+
+typedef struct {
+    jmp_buf fail;            /* out of memory / python error / bail */
+    const char *bail;        /* tree-* reason on a bail longjmp */
+    int fragment;
+    ArenaBlock *arena;
+    PyObject **owned;        /* joined table-text strings */
+    Py_ssize_t n_owned, cap_owned;
+    PyObject **errs;         /* borrowed error texts, in order */
+    Py_ssize_t n_errs, cap_errs;
+    PyObject **tt;           /* pending table text (borrowed) */
+    Py_ssize_t n_tt, cap_tt;
+    int tt_non_ws;
+    FNode *doc, *html, *head, *body, *form_ptr, *context;
+    FNode *st[FB_STACK_MAX];
+    int nst;
+    FmtEntry fmt[FB_FMT_MAX];
+    int nfmt;
+    unsigned char tmodes[FB_TMODE_MAX];
+    int ntm;
+    int mode, original_mode, dmode, seen_template;
+    int tz_state;            /* FastFeed.state: last pulled record's */
+    PyObject *doc_mode_fn;   /* treebuilder.determine_doc_mode */
+} TB;
+
+static void
+tb_fail(TB *tb, const char *bail)
+{
+    tb->bail = bail;
+    longjmp(tb->fail, 1);
+}
+
+static void *
+tb_grow(TB *tb, void *p, Py_ssize_t *cap, Py_ssize_t need, size_t elt)
+{
+    if (need <= *cap) return p;
+    Py_ssize_t nc = *cap ? *cap * 2 : 64;
+    while (nc < need) nc *= 2;
+    void *np = PyMem_Realloc(p, nc * elt);
+    if (!np) { PyErr_NoMemory(); tb_fail(tb, NULL); }
+    *cap = nc;
+    return np;
+}
+
+static void
+tb_err(TB *tb, int e)
+{
+    tb->errs = tb_grow(tb, tb->errs, &tb->cap_errs, tb->n_errs + 1,
+                       sizeof(PyObject *));
+    tb->errs[tb->n_errs++] = ERR_OBJ[e];
+}
+
+static FNode *
+new_node(TB *tb, int type)
+{
+    ArenaBlock *b = tb->arena;
+    if (!b || b->used == ARENA_BLOCK) {
+        b = PyMem_Malloc(sizeof(ArenaBlock));
+        if (!b) { PyErr_NoMemory(); tb_fail(tb, NULL); }
+        b->next = tb->arena;
+        b->used = 0;
+        tb->arena = b;
+    }
+    FNode *n = &b->nodes[b->used++];
+    memset(n, 0, sizeof(*n));
+    n->type = (unsigned char)type;
+    return n;
+}
+
+static FNode *
+new_element(TB *tb, short tag, PyObject *name, PyObject *attrs)
+{
+    FNode *n = new_node(tb, N_ELEMENT);
+    n->tag = tag;
+    n->name = name ? name : TAG_NAME[tag];
+    n->attrs = attrs;
+    return n;
+}
+
+static FNode *
+new_text(TB *tb, PyObject *data)
+{
+    FNode *n = new_node(tb, N_TEXT);
+    n->data = data;
+    return n;
+}
+
+/* -- tree mutation (Node.append_child / insert_before / remove_child /
+      reparent_children_to / clone_shallow) -- */
+
+static void
+append_child(TB *tb, FNode *p, FNode *c)
+{
+    if (c->parent)   /* a node in two child lists cannot be mirrored */
+        tb_fail(tb, "tree-internal");
+    c->parent = p;
+    c->next = NULL;
+    c->prev = p->last;
+    if (p->last) p->last->next = c; else p->first = c;
+    p->last = c;
+}
+
+static void
+insert_before(TB *tb, FNode *p, FNode *c, FNode *ref)
+{
+    if (!ref || ref->parent != p) { append_child(tb, p, c); return; }
+    if (c->parent) tb_fail(tb, "tree-internal");
+    c->parent = p;
+    c->next = ref;
+    c->prev = ref->prev;
+    if (ref->prev) ref->prev->next = c; else p->first = c;
+    ref->prev = c;
+}
+
+static void
+remove_child(FNode *p, FNode *c)
+{
+    if (c->parent != p) return;
+    if (c->prev) c->prev->next = c->next; else p->first = c->next;
+    if (c->next) c->next->prev = c->prev; else p->last = c->prev;
+    c->parent = c->prev = c->next = NULL;
+}
+
+static void
+reparent_children(FNode *src, FNode *dst)
+{
+    if (!src->first) return;
+    for (FNode *c = src->first; c; c = c->next) c->parent = dst;
+    src->first->prev = dst->last;
+    if (dst->last) dst->last->next = src->first; else dst->first = src->first;
+    dst->last = src->last;
+    src->first = src->last = NULL;
+}
+
+static FNode *
+clone_shallow(TB *tb, FNode *n)
+{
+    return new_element(tb, n->tag, n->name, n->attrs);
+}
+
+/* -- names -- */
+
+static short
+tag_of(PyObject *name)
+{
+    PyObject *v = PyDict_GetItemWithError(TAG_IDS, name);
+    if (!v) return TAG_OTHER;   /* an error here is impossible for str */
+    return (short)PyLong_AsLong(v);
+}
+
+/* `n.name == name` for an element n */
+static int
+name_is(FNode *n, short tag, PyObject *name)
+{
+    if (n->type != N_ELEMENT) return 0;
+    if (tag != TAG_OTHER) return n->tag == tag;
+    if (n->tag != TAG_OTHER) return 0;
+    return n->name == name || PyUnicode_Compare(n->name, name) == 0;
+}
+
+#define IS(n, t) ((n)->type == N_ELEMENT && (n)->tag == (t))
+
+static int
+is_ws_only(PyObject *s)
+{
+    Py_ssize_t n = PyUnicode_GET_LENGTH(s);
+    int kind = PyUnicode_KIND(s);
+    const void *d = PyUnicode_DATA(s);
+    for (Py_ssize_t i = 0; i < n; i++)
+        if (!is_ws(PyUnicode_READ(kind, d, i))) return 0;
+    return 1;
+}
+
+/* ascii_lower(s) == lit, lit ASCII-lower */
+static int
+ascii_lower_eq(PyObject *s, const char *lit)
+{
+    Py_ssize_t n = PyUnicode_GET_LENGTH(s);
+    if ((size_t)n != strlen(lit)) return 0;
+    for (Py_ssize_t i = 0; i < n; i++) {
+        Py_UCS4 c = PyUnicode_READ_CHAR(s, i);
+        if (c >= 'A' && c <= 'Z') c += 32;
+        if (c != (Py_UCS4)(unsigned char)lit[i]) return 0;
+    }
+    return 1;
+}
+
+/* `a.attrs == b.attrs` (order-sensitive list compare, attrs_equal) */
+static int
+attrs_equal(TB *tb, PyObject *a, PyObject *b)
+{
+    if (a == b) return 1;
+    Py_ssize_t na = a ? PyList_GET_SIZE(a) : 0;
+    Py_ssize_t nb = b ? PyList_GET_SIZE(b) : 0;
+    if (na != nb) return 0;
+    if (na == 0) return 1;
+    int eq = PyObject_RichCompareBool(a, b, Py_EQ);
+    if (eq < 0) tb_fail(tb, NULL);
+    return eq;
+}
+
+/* -- stack helpers -- */
+
+static void
+tb_push(TB *tb, FNode *n)
+{
+    if (tb->nst < FB_STACK_MAX) {
+        tb->st[tb->nst++] = n;
+        n->in_stack = 1;
+        if (n->tag == TAG_template) tb->seen_template = 1;
+    }
+}
+
+static FNode *
+tb_top(TB *tb)
+{
+    return tb->nst ? tb->st[tb->nst - 1] : NULL;
+}
+
+static FNode *
+tb_current(TB *tb)
+{
+    return tb->nst ? tb->st[tb->nst - 1] : tb->doc;
+}
+
+static FNode *
+tb_pop(TB *tb)
+{
+    FNode *n = tb->st[--tb->nst];
+    n->in_stack = 0;
+    return n;
+}
+
+static void
+stack_remove_at(TB *tb, int i)
+{
+    tb->st[i]->in_stack = 0;
+    memmove(&tb->st[i], &tb->st[i + 1],
+            (size_t)(tb->nst - i - 1) * sizeof(FNode *));
+    tb->nst--;
+}
+
+static int
+stack_index(TB *tb, FNode *n)
+{
+    for (int i = 0; i < tb->nst; i++)
+        if (tb->st[i] == n) return i;
+    return -1;
+}
+
+static void
+pop_until(TB *tb, short tag, PyObject *name)
+{
+    while (tb->nst)
+        if (name_is(tb_pop(tb), tag, name)) return;
+}
+
+static void
+pop_until_any(TB *tb, short a, short b)
+{
+    while (tb->nst) {
+        FNode *n = tb_pop(tb);
+        if (IS(n, a) || IS(n, b)) return;
+    }
+}
+
+static int
+has_open(TB *tb, short tag, PyObject *name)
+{
+    for (int i = tb->nst - 1; i >= 0; i--)
+        if (name_is(tb->st[i], tag, name)) return 1;
+    return 0;
+}
+
+static int
+has_open_table_section(TB *tb)
+{
+    return has_open(tb, TAG_thead, NULL) || has_open(tb, TAG_tbody, NULL)
+        || has_open(tb, TAG_tfoot, NULL);
+}
+
+static int
+has_open_flag(TB *tb, unsigned f)
+{
+    for (int i = tb->nst - 1; i >= 0; i--)
+        if (HAS(tb->st[i]->tag, f)) return 1;
+    return 0;
+}
+
+static void
+pop_until_heading(TB *tb)
+{
+    while (tb->nst)
+        if (HAS(tb_pop(tb)->tag, F_HEADING)) return;
+}
+
+static int
+in_template_context(TB *tb)
+{
+    return tb->seen_template && has_open(tb, TAG_template, NULL);
+}
+
+/* _in_scope / _in_list_item_scope / _in_button_scope /
+   _in_table_scope: every open element is HTML-namespace here */
+static int
+in_scope_flag(TB *tb, short tag, PyObject *name, unsigned scoping)
+{
+    for (int i = tb->nst - 1; i >= 0; i--) {
+        FNode *n = tb->st[i];
+        if (name_is(n, tag, name)) return 1;
+        if (HAS(n->tag, scoping)) return 0;
+    }
+    return 0;
+}
+
+#define in_scope(tb, t, nm) in_scope_flag((tb), (t), (nm), F_SCOPING)
+#define in_li_scope(tb, t) in_scope_flag((tb), (t), NULL, F_LI_SCOPING)
+#define in_button_scope(tb, t) in_scope_flag((tb), (t), NULL, F_BTN_SCOPING)
+#define in_table_scope(tb, t, nm) in_scope_flag((tb), (t), (nm), F_TBL_SCOPING)
+
+static int
+in_select_scope(TB *tb, short tag)
+{
+    for (int i = tb->nst - 1; i >= 0; i--) {
+        FNode *n = tb->st[i];
+        if (IS(n, tag)) return 1;
+        if (!IS(n, TAG_optgroup) && !IS(n, TAG_option)) return 0;
+    }
+    return 0;
+}
+
+/* _generate_implied_end_tags(except_name); except_tag < 0 == None */
+static void
+gen_implied(TB *tb, int except_tag)
+{
+    while (tb->nst) {
+        FNode *top = tb->st[tb->nst - 1];
+        if (!HAS(top->tag, F_IMPLIED)) break;
+        if (except_tag >= 0 && top->tag == except_tag) break;
+        tb_pop(tb);
+    }
+}
+
+static void
+gen_implied_thoroughly(TB *tb)
+{
+    while (tb->nst && HAS(tb->st[tb->nst - 1]->tag, F_IMPLIED_ALL))
+        tb_pop(tb);
+}
+
+/* -- active formatting list -- */
+
+static void
+fmt_remove(TB *tb, int i)
+{
+    memmove(&tb->fmt[i], &tb->fmt[i + 1],
+            (size_t)(tb->nfmt - i - 1) * sizeof(FmtEntry));
+    tb->nfmt--;
+}
+
+static int
+fmt_entry_is(FmtEntry *e, short tag, PyObject *name)
+{
+    if (!e->el) return 0;   /* marker */
+    if (tag != TAG_OTHER) return e->tag == tag;
+    return e->tag == TAG_OTHER
+        && (e->name == name || PyUnicode_Compare(e->name, name) == 0);
+}
+
+static void
+fmt_push(TB *tb, short tag, PyObject *name, FNode *el)
+{
+    int count_same = 0, earliest = 0;
+    for (int i = 0; i < tb->nfmt; i++) {
+        FmtEntry *e = &tb->fmt[i];
+        if (fmt_entry_is(e, tag, name)
+                && attrs_equal(tb, e->el->attrs, el->attrs)) {
+            if (count_same == 0) earliest = i;
+            if (++count_same >= 3) {
+                fmt_remove(tb, earliest);
+                break;
+            }
+        }
+    }
+    if (tb->nfmt < FB_FMT_MAX) {
+        FmtEntry e = {el, tag, name};
+        tb->fmt[tb->nfmt++] = e;
+    }
+}
+
+static void
+fmt_push_marker(TB *tb)
+{
+    if (tb->nfmt < FB_FMT_MAX) {
+        FmtEntry e = {NULL, TAG_OTHER, NULL};
+        tb->fmt[tb->nfmt++] = e;
+    }
+}
+
+static void
+fmt_clear_to_marker(TB *tb)
+{
+    while (tb->nfmt)
+        if (tb->fmt[--tb->nfmt].el == NULL) return;
+}
+
+static int
+fmt_find_last(TB *tb, short tag, PyObject *name)
+{
+    for (int i = tb->nfmt - 1; i >= 0; i--) {
+        if (!tb->fmt[i].el) return -1;
+        if (fmt_entry_is(&tb->fmt[i], tag, name)) return i;
+    }
+    return -1;
+}
+
+static int
+fmt_index_of(TB *tb, FNode *el)
+{
+    for (int i = 0; i < tb->nfmt; i++)
+        if (tb->fmt[i].el == el) return i;
+    return -1;
+}
+
+/* _reconstruct_formatting */
+static void
+reconstruct(TB *tb, FNode *parent)
+{
+    if (!tb->nfmt) return;
+    FmtEntry *last = &tb->fmt[tb->nfmt - 1];
+    if (!last->el || last->el->in_stack) return;
+    int first = 0;
+    for (int i = tb->nfmt - 1; i > 0; i--) {
+        FmtEntry *e = &tb->fmt[i - 1];
+        if (!e->el || e->el->in_stack) { first = i; break; }
+    }
+    for (int i = first; i < tb->nfmt; i++) {
+        if (!tb->fmt[i].el) continue;
+        FNode *n = clone_shallow(tb, tb->fmt[i].el);
+        append_child(tb, parent, n);
+        tb_push(tb, n);
+        tb->fmt[i].el = n;
+        parent = n;
+    }
+}
+
+/* -- foster parenting -- */
+
+static void
+foster_parent(TB *tb, FNode **parent, FNode **table)
+{
+    *table = NULL;
+    for (int i = tb->nst - 1; i >= 0; i--)
+        if (IS(tb->st[i], TAG_table)) { *table = tb->st[i]; break; }
+    if (*table && (*table)->parent) *parent = (*table)->parent;
+    else *parent = tb_current(tb);
+}
+
+/* insert `child` at the foster position (or as _foster_insert) */
+static void
+foster_place(TB *tb, FNode *parent, FNode *table, FNode *child)
+{
+    if (table && parent == table->parent)
+        insert_before(tb, parent, child, table);
+    else
+        append_child(tb, parent, child);
+}
+
+static void
+foster_insert(TB *tb, FNode *child)
+{
+    FNode *parent, *table;
+    foster_parent(tb, &parent, &table);
+    foster_place(tb, parent, table, child);
+}
+
+/* _reset_insertion_mode */
+static int
+reset_insertion_mode(TB *tb)
+{
+    if (!tb->nst) return M_IN_BODY;
+    int has_table = has_open_flag(tb, F_TABLE_EL);
+    for (int i = tb->nst - 1; i >= 0; i--) {
+        switch (tb->st[i]->tag) {
+        case TAG_select:
+            return has_table ? M_IN_SELECT_IN_TABLE : M_IN_SELECT;
+        case TAG_td: case TAG_th: return M_IN_CELL;
+        case TAG_tr: return M_IN_ROW;
+        case TAG_tbody: case TAG_thead: case TAG_tfoot:
+            return M_IN_TABLE_BODY;
+        case TAG_caption: return M_IN_CAPTION;
+        case TAG_table: return M_IN_TABLE;
+        case TAG_head: return M_IN_HEAD;
+        case TAG_body: case TAG_html: return M_IN_BODY;
+        default: break;
+        }
+    }
+    return M_IN_BODY;
+}
+
+/* -- template machinery -- */
+
+static FNode *
+create_template(TB *tb, PyObject *attrs)
+{
+    FNode *tmpl = new_element(tb, TAG_template, NULL, attrs);
+    append_child(tb, tmpl, new_element(tb, TAG_content, NULL, NULL));
+    return tmpl;
+}
+
+static void
+open_template(TB *tb, FNode *tmpl, int self_closing)
+{
+    if (self_closing) return;
+    tb_push(tb, tmpl);
+    if (tmpl->first) tb_push(tb, tmpl->first);
+    fmt_push_marker(tb);
+    if (tb->ntm < FB_TMODE_MAX) tb->tmodes[tb->ntm++] = M_IN_TEMPLATE;
+    tb->mode = M_IN_TEMPLATE;
+}
+
+static void
+close_template(TB *tb)
+{
+    gen_implied_thoroughly(tb);
+    FNode *top = tb_top(tb);
+    if (!top || !IS(top, TAG_template)) tb_err(tb, E_BEFORE_TEMPLATE);
+    pop_until(tb, TAG_template, NULL);
+    fmt_clear_to_marker(tb);
+    if (tb->ntm) tb->ntm--;
+    tb->mode = reset_insertion_mode(tb);
+}
+
+static void
+template_mode_replace(TB *tb, int mode)
+{
+    if (tb->ntm) tb->ntm--;
+    if (tb->ntm < FB_TMODE_MAX) tb->tmodes[tb->ntm++] = (unsigned char)mode;
+}
+
+/* -- misc -- */
+
+static FNode *
+ensure_html(TB *tb)
+{
+    if (!tb->html) {
+        tb->html = new_element(tb, TAG_html, NULL, NULL);
+        append_child(tb, tb->doc, tb->html);
+        tb_push(tb, tb->html);
+    }
+    return tb->html;
+}
+
+static void
+ensure_body(TB *tb)
+{
+    ensure_html(tb);
+    if (tb->body) {
+        if (stack_index(tb, tb->body) >= 0) return;
+        tb_push(tb, tb->body);
+        return;
+    }
+    tb->body = new_element(tb, TAG_body, NULL, NULL);
+    append_child(tb, tb->html, tb->body);
+    tb_push(tb, tb->body);
+}
+
+static void
+close_head(TB *tb)
+{
+    if (tb->head) {
+        pop_until(tb, TAG_head, NULL);
+        tb->head = NULL;
+    }
+    tb->mode = M_IN_BODY;
+}
+
+static void
+close_cell(TB *tb)
+{
+    if (!has_open(tb, TAG_td, NULL) && !has_open(tb, TAG_th, NULL)) return;
+    pop_until_any(tb, TAG_td, TAG_th);
+    fmt_clear_to_marker(tb);
+}
+
+/* insert a token element at the current node (the common
+   `n = Node(...); _attach; _current().append_child(n)` shape) */
+static FNode *
+insert_el(TB *tb, FTok *t)
+{
+    FNode *n = new_element(tb, t->tag, t->name, t->attrs);
+    append_child(tb, tb_current(tb), n);
+    return n;
+}
+
+/* ... then `if not self_closing and name not in _VOID_ELEMENTS: push` */
+static FNode *
+insert_el_push(TB *tb, FTok *t)
+{
+    FNode *n = insert_el(tb, t);
+    if (!t->self_closing && !HAS(t->tag, F_VOID)) tb_push(tb, n);
+    return n;
+}
+
+static void
+insert_text(TB *tb, FNode *parent, PyObject *data)
+{
+    append_child(tb, parent, new_text(tb, data));
+}
+
+static void
+insert_comment(TB *tb, FNode *parent)
+{
+    append_child(tb, parent, new_node(tb, N_COMMENT));
+}
+
+/* -- adoption agency (TreeBuilder.adoption_agency) -- */
+
+static int
+adoption_agency(TB *tb, short tag, PyObject *name)
+{
+    if (!HAS(tag, F_FMT)) return 0;
+    FNode *cur = tb_top(tb);
+    if (cur && name_is(cur, tag, name) && fmt_index_of(tb, cur) < 0) {
+        gen_implied_thoroughly(tb);
+        cur = tb_top(tb);
+        if (!cur || !name_is(cur, tag, name)) tb_err(tb, E_AAA_MISMATCH);
+        if (cur && name_is(cur, tag, name)) tb_pop(tb);
+        return 1;
+    }
+    for (int outer = 0; outer < 8; outer++) {
+        int fmt_idx = fmt_find_last(tb, tag, name);
+        if (fmt_idx < 0) return 0;
+        FNode *fe = tb->fmt[fmt_idx].el;
+        int fe_si = -1;
+        if (fe && fe->in_stack) {
+            for (int i = tb->nst - 1; i >= 0; i--)
+                if (tb->st[i] == fe) { fe_si = i; break; }
+        }
+        if (fe_si < 0) { fmt_remove(tb, fmt_idx); return 1; }
+        if (!in_scope(tb, tag, name)) { tb_err(tb, E_AAA_SCOPE); return 1; }
+
+        FNode *fb = NULL;
+        for (int i = fe_si + 1; i < tb->nst; i++)
+            if (HAS(tb->st[i]->tag, F_SPECIAL)) { fb = tb->st[i]; break; }
+        if (!fb) {
+            while (tb->nst)
+                if (tb_pop(tb) == fe) break;
+            fmt_remove(tb, fmt_idx);
+            return 1;
+        }
+
+        FNode *ca = fe_si > 0 ? tb->st[fe_si - 1] : tb->doc;
+        int bookmark = fmt_idx;
+        FNode *inner = fb, *last = fb;
+        for (int k = 1; k < 9; k++) {
+            int node_si = stack_index(tb, inner);
+            if (node_si <= 0) break;
+            inner = tb->st[node_si - 1];
+            if (inner == fe) break;
+            int node_fi = fmt_index_of(tb, inner);
+            if (k > 3 && node_fi >= 0) {
+                fmt_remove(tb, node_fi);
+                if (node_fi < bookmark) bookmark--;
+                node_fi = -1;
+            }
+            if (node_fi < 0) {
+                stack_remove_at(tb, node_si - 1);
+                continue;
+            }
+            FNode *rep = clone_shallow(tb, inner);
+            tb->fmt[node_fi].el = rep;
+            int si = stack_index(tb, inner);
+            if (si >= 0) {
+                inner->in_stack = 0;
+                rep->in_stack = 1;
+                tb->st[si] = rep;
+            }
+            reparent_children(inner, rep);
+            if (inner->parent) {
+                FNode *p = inner->parent;
+                insert_before(tb, p, rep, inner);
+                remove_child(p, inner);
+            }
+            inner = rep;
+            if (last == fb) bookmark = node_fi + 1;
+            if (last->parent) remove_child(last->parent, last);
+            append_child(tb, inner, last);
+            last = inner;
+        }
+        if (last->parent) remove_child(last->parent, last);
+        if (ca->type == N_ELEMENT && HAS(ca->tag, F_FOSTER))
+            foster_insert(tb, last);
+        else
+            append_child(tb, ca, last);
+
+        FNode *ne = clone_shallow(tb, fe);
+        reparent_children(fb, ne);
+        append_child(tb, fb, ne);
+
+        fmt_idx = fmt_index_of(tb, fe);
+        if (fmt_idx >= 0) {
+            fmt_remove(tb, fmt_idx);
+            if (fmt_idx < bookmark && bookmark > 0) bookmark--;
+        }
+        if (bookmark > tb->nfmt) bookmark = tb->nfmt;
+        if (tb->nfmt < FB_FMT_MAX) {
+            memmove(&tb->fmt[bookmark + 1], &tb->fmt[bookmark],
+                    (size_t)(tb->nfmt - bookmark) * sizeof(FmtEntry));
+            FmtEntry e = {ne, tag, name};
+            tb->fmt[bookmark] = e;
+            tb->nfmt++;
+        }
+
+        int fe_si2 = stack_index(tb, fe);
+        if (fe_si2 >= 0) stack_remove_at(tb, fe_si2);
+        int fb_si = stack_index(tb, fb);
+        if (fb_si >= 0 && tb->nst < FB_STACK_MAX) {
+            memmove(&tb->st[fb_si + 2], &tb->st[fb_si + 1],
+                    (size_t)(tb->nst - fb_si - 1) * sizeof(FNode *));
+            tb->st[fb_si + 1] = ne;
+            tb->nst++;
+            ne->in_stack = 1;
+        }
+    }
+    return 1;
+}
+
+/* -- IN_TEMPLATE (TreeBuilder._handle_in_template); returns the action
+      or A_NONE for "not handled" -- */
+
+static int
+handle_in_template(TB *tb, FTok *t)
+{
+    switch (t->type) {
+    case T_CHAR:
+        if (t->data && PyUnicode_GET_LENGTH(t->data)) {
+            if (is_ws_only(t->data)) return A_BREAK;
+            template_mode_replace(tb, M_IN_BODY);
+            tb->mode = M_IN_BODY;
+            return A_REPROCESS;
+        }
+        return A_BREAK;
+    case T_COMMENT:
+        insert_comment(tb, tb_current(tb));
+        return A_BREAK;
+    case T_DOCTYPE:
+        tb_err(tb, E_STRAY_DOCTYPE);
+        return A_BREAK;
+    case T_END:
+        if (t->tag == TAG_template && has_open(tb, TAG_template, NULL))
+            close_template(tb);
+        return A_BREAK;
+    case T_START: {
+        int mode = M_IN_BODY;
+        if (HAS(t->tag, F_TMPL_HEAD)) {
+            if (t->tag == TAG_template) {
+                FNode *tmpl = create_template(tb, t->attrs);
+                append_child(tb, tb_current(tb), tmpl);
+                open_template(tb, tmpl, t->self_closing);
+            } else {
+                insert_el_push(tb, t);
+            }
+            return A_BREAK;
+        }
+        switch (t->tag) {
+        case TAG_caption: case TAG_colgroup: case TAG_tbody:
+        case TAG_tfoot: case TAG_thead: case TAG_table: case TAG_col:
+            mode = M_IN_TABLE; break;
+        case TAG_tr: mode = M_IN_TABLE_BODY; break;
+        case TAG_td: case TAG_th: mode = M_IN_ROW; break;
+        case TAG_select: mode = M_IN_SELECT; break;
+        default: break;
+        }
+        template_mode_replace(tb, mode);
+        tb->mode = mode;
+        return A_REPROCESS;
+    }
+    case T_EOF:
+        if (!has_open(tb, TAG_template, NULL)) return A_NONE;
+        tb_err(tb, E_EOF_TEMPLATE);
+        close_template(tb);
+        return A_REPROCESS;
+    }
+    return A_NONE;
+}
+
+/* -- body_autoclose_on_start (TreeBuilder._body_autoclose) -- */
+
+static void
+body_autoclose(TB *tb, short tag)
+{
+    if ((tag == TAG_p || HAS(tag, F_BLOCK_LIKE))
+            && in_button_scope(tb, TAG_p)) {
+        gen_implied(tb, TAG_p);
+        pop_until(tb, TAG_p, NULL);
+    }
+    if (tag == TAG_li && in_li_scope(tb, TAG_li)) {
+        gen_implied(tb, TAG_li);
+        pop_until(tb, TAG_li, NULL);
+    }
+    if (tag == TAG_dt || tag == TAG_dd) {
+        if (in_scope(tb, TAG_dd, NULL)) {
+            gen_implied(tb, TAG_dd);
+            pop_until(tb, TAG_dd, NULL);
+        }
+        if (in_scope(tb, TAG_dt, NULL)) {
+            gen_implied(tb, TAG_dt);
+            pop_until(tb, TAG_dt, NULL);
+        }
+    }
+    if (HAS(tag, F_SECTION) && has_open_table_section(tb)) {
+        pop_until(tb, TAG_thead, NULL);
+        pop_until(tb, TAG_tbody, NULL);
+        pop_until(tb, TAG_tfoot, NULL);
+    }
+    if (tag == TAG_tr && has_open(tb, TAG_tr, NULL))
+        pop_until(tb, TAG_tr, NULL);
+    if (HAS(tag, F_CELL)
+            && (has_open(tb, TAG_td, NULL) || has_open(tb, TAG_th, NULL)))
+        pop_until_any(tb, TAG_td, TAG_th);
+}
+
+/* the shared tail of both in-body dispatchers: generic insert, push,
+   formatting push */
+static void
+insert_generic_fmt(TB *tb, FTok *t, int is_fmt)
+{
+    FNode *n = insert_el(tb, t);
+    if (!t->self_closing && !HAS(t->tag, F_VOID)) {
+        tb_push(tb, n);
+        if (is_fmt) fmt_push(tb, t->tag, t->name, n);
+    }
+}
+
+/* handle_in_body_start, DOCUMENT variant
+   (TreeBuilder._in_body_start_document; its generic fast path is the
+   same code as the tail below) */
+static void
+in_body_start_document(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    int in_template = in_template_context(tb);
+    int is_fmt = HAS(tag, F_FMT);
+    if (is_fmt) reconstruct(tb, tb_current(tb));
+    if (tag == TAG_html) {
+        tb_err(tb, E_START_TAG);
+        return;   /* attribute merge: no effect on extraction */
+    }
+    if (HAS(tag, F_HEADING) && has_open_flag(tb, F_HEADING)) {
+        tb_err(tb, E_START_TAG);
+        pop_until_heading(tb);
+    }
+    switch (tag) {
+    case TAG_body:
+        tb_err(tb, E_START_TAG);
+        if (!in_template) ensure_body(tb);
+        return;
+    case TAG_select:
+        if (!in_template) ensure_body(tb);
+        tb_push(tb, insert_el(tb, t));
+        tb->mode = M_IN_SELECT;
+        return;
+    case TAG_table:
+        if (tb->dmode != DM_QUIRKS && in_button_scope(tb, TAG_p))
+            pop_until(tb, TAG_p, NULL);
+        if (!in_template) ensure_body(tb);
+        tb_push(tb, insert_el(tb, t));
+        tb->mode = M_IN_TABLE;
+        return;
+    case TAG_applet: case TAG_marquee: case TAG_object: {
+        if (!in_template) ensure_body(tb);
+        FNode *n = insert_el(tb, t);
+        fmt_push_marker(tb);
+        if (!t->self_closing) tb_push(tb, n);
+        return;
+    }
+    case TAG_template: {
+        if (!in_template) ensure_body(tb);
+        FNode *tmpl = create_template(tb, t->attrs);
+        append_child(tb, tb_current(tb), tmpl);
+        open_template(tb, tmpl, t->self_closing);
+        return;
+    }
+    case TAG_form: {
+        if (tb->form_ptr && !in_template) {
+            tb_err(tb, E_START_TAG);
+            return;
+        }
+        if (in_button_scope(tb, TAG_p)) pop_until(tb, TAG_p, NULL);
+        if (!in_template) ensure_body(tb);
+        FNode *n = insert_el(tb, t);
+        if (!in_template) tb->form_ptr = n;
+        if (!t->self_closing) tb_push(tb, n);
+        return;
+    }
+    default:
+        break;
+    }
+    body_autoclose(tb, tag);
+    if (!in_template) ensure_body(tb);
+    insert_generic_fmt(tb, t, is_fmt);
+}
+
+/* handle_in_body_start_fragment (TreeBuilder._in_body_start_fragment) */
+static void
+in_body_start_fragment(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    if (HAS(tag, F_BODY_IGNORED)) {
+        tb_err(tb, E_START_TAG);
+        return;
+    }
+    if (HAS(tag, F_HEADING) && has_open_flag(tb, F_HEADING)) {
+        tb_err(tb, E_START_TAG);
+        pop_until_heading(tb);
+    }
+    switch (tag) {
+    case TAG_applet: case TAG_marquee: case TAG_object: {
+        FNode *n = insert_el(tb, t);
+        fmt_push_marker(tb);
+        if (!t->self_closing) tb_push(tb, n);
+        return;
+    }
+    case TAG_table:
+        if (in_button_scope(tb, TAG_p)) pop_until(tb, TAG_p, NULL);
+        tb_push(tb, insert_el(tb, t));
+        tb->mode = M_IN_TABLE;
+        return;
+    case TAG_select:
+        tb_push(tb, insert_el(tb, t));
+        tb->mode = M_IN_SELECT;
+        return;
+    case TAG_template: {
+        FNode *tmpl = create_template(tb, t->attrs);
+        append_child(tb, tb_current(tb), tmpl);
+        open_template(tb, tmpl, t->self_closing);
+        return;
+    }
+    case TAG_form: {
+        if (tb->form_ptr && !in_template_context(tb)) {
+            tb_err(tb, E_START_TAG);
+            return;
+        }
+        if (in_button_scope(tb, TAG_p)) pop_until(tb, TAG_p, NULL);
+        FNode *n = insert_el(tb, t);
+        if (!in_template_context(tb)) tb->form_ptr = n;
+        if (!t->self_closing) tb_push(tb, n);
+        return;
+    }
+    default:
+        break;
+    }
+    int is_fmt = HAS(tag, F_FMT);
+    if (is_fmt) reconstruct(tb, tb_current(tb));
+    body_autoclose(tb, tag);
+    insert_generic_fmt(tb, t, is_fmt);
+}
+
+/* -- table text flush (the IN_TABLE_TEXT exit and
+      _flush_table_text_at_stop) -- */
+
+static PyObject *
+table_text_join(TB *tb)
+{
+    if (tb->n_tt == 1) return tb->tt[0];
+    PyObject *parts = PyList_New(tb->n_tt);
+    if (!parts) tb_fail(tb, NULL);
+    for (Py_ssize_t k = 0; k < tb->n_tt; k++) {
+        Py_INCREF(tb->tt[k]);
+        PyList_SET_ITEM(parts, k, tb->tt[k]);
+    }
+    PyObject *empty = PyUnicode_FromStringAndSize("", 0);
+    PyObject *s = empty ? PyUnicode_Join(empty, parts) : NULL;
+    Py_XDECREF(empty);
+    Py_DECREF(parts);
+    if (!s) tb_fail(tb, NULL);
+    tb->owned = tb_grow(tb, tb->owned, &tb->cap_owned, tb->n_owned + 1,
+                        sizeof(PyObject *));
+    tb->owned[tb->n_owned++] = s;
+    return s;
+}
+
+static void
+table_text_add(TB *tb, PyObject *data)
+{
+    tb->tt = tb_grow(tb, tb->tt, &tb->cap_tt, tb->n_tt + 1,
+                     sizeof(PyObject *));
+    tb->tt[tb->n_tt++] = data;
+    if (!is_ws_only(data)) tb->tt_non_ws = 1;
+}
+
+/* -- IN_HEAD_NOSCRIPT (TreeBuilder._noscript_mode) -- */
+
+static int
+noscript_mode(TB *tb, FTok *t)
+{
+    switch (t->type) {
+    case T_DOCTYPE:
+        tb_err(tb, E_NS_DOCTYPE);
+        return A_BREAK;
+    case T_COMMENT:
+        insert_comment(tb, tb_current(tb));
+        return A_BREAK;
+    case T_CHAR:
+        if (t->data && is_ws_only(t->data)) return A_BREAK;
+        tb_err(tb, E_NS_CHAR);
+        if (tb->nst) tb_pop(tb);
+        tb->mode = M_IN_HEAD;
+        return A_REPROCESS;
+    case T_START:
+        if (t->tag == TAG_html) {
+            tb_err(tb, E_START_TAG);
+            return A_BREAK;
+        }
+        if (HAS(t->tag, F_NOSCRIPT_EL)) {
+            FNode *n = insert_el(tb, t);
+            if (!t->self_closing && !HAS(t->tag, F_VOID)
+                    && t->tag != TAG_basefont && t->tag != TAG_bgsound)
+                tb_push(tb, n);
+            if (tb->tz_state == S_RCDATA || tb->tz_state == S_RAWTEXT
+                    || tb->tz_state == S_SCRIPT) {
+                tb->original_mode = tb->mode;
+                tb->mode = M_TEXT;
+            }
+            return A_BREAK;
+        }
+        tb_err(tb, E_NS_START);
+        if (t->tag == TAG_head || t->tag == TAG_noscript) return A_BREAK;
+        if (tb->nst) tb_pop(tb);
+        tb->mode = M_IN_HEAD;
+        return A_REPROCESS;
+    case T_END:
+        if (t->tag == TAG_noscript) {
+            if (tb->nst) tb_pop(tb);
+            tb->mode = M_IN_HEAD;
+            return A_BREAK;
+        }
+        if (t->tag == TAG_br) {
+            tb_err(tb, E_NS_BR);
+            if (tb->nst) tb_pop(tb);
+            tb->mode = M_IN_HEAD;
+            return A_REPROCESS;
+        }
+        tb_err(tb, E_NS_END);
+        return A_BREAK;
+    case T_EOF:
+        tb_err(tb, E_NS_EOF);
+        if (tb->nst) tb_pop(tb);
+        tb->mode = M_IN_HEAD;
+        return A_REPROCESS;
+    }
+    return A_BREAK;
+}
+
+/* -- shared pre-switch blocks (TreeBuilder._pre_switch; the foreign
+      block cannot fire: no foreign element is ever created) -- */
+
+static int
+pre_switch(TB *tb, FTok *t)
+{
+    int mode = tb->mode;
+    if (mode == M_IN_TEMPLATE) {
+        int act = handle_in_template(tb, t);
+        if (act != A_NONE) return act;
+    }
+    if (mode == M_IN_TABLE_TEXT) {
+        if (t->type == T_CHAR && t->data && PyUnicode_GET_LENGTH(t->data)) {
+            table_text_add(tb, t->data);
+            return A_BREAK;
+        }
+        if (tb->n_tt) {
+            FNode *text = new_text(tb, table_text_join(tb));
+            if (tb->tt_non_ws) {
+                tb_err(tb, E_FOSTER);
+                foster_insert(tb, text);
+            } else {
+                append_child(tb, tb_current(tb), text);
+            }
+        }
+        tb->n_tt = 0;
+        tb->tt_non_ws = 0;
+        tb->mode = M_IN_TABLE;
+        return A_REPROCESS;
+    }
+    if (tb->mode == M_TEXT) {
+        if (t->type == T_CHAR) {
+            if (t->data && PyUnicode_GET_LENGTH(t->data))
+                insert_text(tb, tb_current(tb), t->data);
+            return A_BREAK;
+        }
+        if (t->type == T_END) {
+            if (tb->nst) tb_pop(tb);
+            tb->mode = tb->original_mode;
+            return A_BREAK;
+        }
+        if (t->type == T_EOF) {
+            tb_err(tb, E_EOF_TEXT);
+            if (tb->nst) tb_pop(tb);
+            tb->mode = tb->original_mode;
+            return A_REPROCESS;
+        }
+        return A_BREAK;
+    }
+    if (tb->mode == M_IN_HEAD_NOSCRIPT)
+        return noscript_mode(tb, t);
+    return A_NONE;
+}
+
+/* -- EOF in both loops (the modes that do more than stop) -- */
+
+static int
+eof_common(TB *tb)
+{
+    switch (tb->mode) {
+    case M_IN_TEMPLATE:
+        return A_STOP;
+    case M_IN_BODY: case M_IN_CAPTION: case M_IN_CELL: case M_IN_ROW:
+    case M_IN_TABLE_BODY:
+        if (tb->ntm) { tb->mode = M_IN_TEMPLATE; return A_REPROCESS; }
+        for (int i = 0; i < tb->nst; i++) {
+            if (!HAS(tb->st[i]->tag, F_EOF_EXPECTED)) {
+                tb_err(tb, E_EOF_OPEN);
+                break;
+            }
+        }
+        return A_STOP;
+    case M_IN_TABLE: case M_IN_SELECT: case M_IN_SELECT_IN_TABLE: {
+        if (tb->ntm) { tb->mode = M_IN_TEMPLATE; return A_REPROCESS; }
+        FNode *cur = tb_current(tb);
+        if (cur->type == N_ELEMENT && !IS(cur, TAG_html))
+            tb_err(tb, E_EOF_TABLE);
+        return A_STOP;
+    }
+    default:
+        return A_STOP;
+    }
+}
+
+/* -- select modes, identical in both loops -- */
+
+static int
+start_tag_in_select(TB *tb, FTok *t, int document)
+{
+    short tag = t->tag;
+    if (tag == TAG_select) {
+        tb_err(tb, E_START_TAG);
+        if (!in_select_scope(tb, TAG_select)) return A_CHECK;
+        pop_until(tb, TAG_select, NULL);
+        tb->mode = reset_insertion_mode(tb);
+        return A_CHECK;
+    }
+    if (tag == TAG_option && has_open(tb, TAG_option, NULL))
+        pop_until(tb, TAG_option, NULL);
+    if (tag == TAG_optgroup && has_open(tb, TAG_optgroup, NULL)) {
+        if (has_open(tb, TAG_option, NULL)) pop_until(tb, TAG_option, NULL);
+        pop_until(tb, TAG_optgroup, NULL);
+    }
+    if (tag == TAG_option || tag == TAG_optgroup) {
+        insert_el_push(tb, t);
+        return A_CHECK;
+    }
+    if (document && tb->mode == M_IN_SELECT_IN_TABLE
+            && HAS(tag, F_TABLE_EL)) {
+        tb_err(tb, E_START_IN_SELECT);
+        if (!in_select_scope(tb, TAG_select)) return A_CHECK;
+        pop_until(tb, TAG_select, NULL);
+        tb->mode = reset_insertion_mode(tb);
+        return A_REPROCESS;
+    }
+    insert_el_push(tb, t);
+    return A_CHECK;
+}
+
+/* <input type=hidden> in IN_TABLE (both loops) */
+static int
+is_hidden_input(FTok *t)
+{
+    if (t->tag != TAG_input || !t->attrs) return 0;
+    for (Py_ssize_t k = 0; k < PyList_GET_SIZE(t->attrs); k++) {
+        PyObject *pair = PyList_GET_ITEM(t->attrs, k);
+        if (PyUnicode_CompareWithASCIIString(PyTuple_GET_ITEM(pair, 0),
+                                             "type") == 0)
+            return ascii_lower_eq(PyTuple_GET_ITEM(pair, 1), "hidden");
+    }
+    return 0;
+}
+
+/* a cell start tag in IN_TABLE_BODY: implied <tr>, then the cell */
+static void
+insert_row_and_cell(TB *tb, FTok *t)
+{
+    FNode *tr = new_element(tb, TAG_tr, NULL, NULL);
+    append_child(tb, tb_current(tb), tr);
+    tb_push(tb, tr);
+    FNode *cell = new_element(tb, t->tag, t->name, t->attrs);
+    append_child(tb, tr, cell);
+    tb_push(tb, cell);
+    fmt_push_marker(tb);
+    tb->mode = M_IN_CELL;
+}
+
+/* template start tag at the foster position (both loops) */
+static void
+foster_template(TB *tb, FTok *t)
+{
+    FNode *parent, *table;
+    foster_parent(tb, &parent, &table);
+    FNode *tmpl = create_template(tb, t->attrs);
+    foster_place(tb, parent, table, tmpl);
+    open_template(tb, tmpl, t->self_closing);
+}
+
+/* ================= document loop (TreeBuilder._dispatch_document) === */
+
+/* TreeBuilder._foster_start_tag */
+static int
+foster_start_tag(TB *tb, FTok *t)
+{
+    if (t->tag == TAG_template) {
+        foster_template(tb, t);
+        return A_CHECK;
+    }
+    int is_fmt = HAS(t->tag, F_FMT);
+    FNode *parent, *table;
+    foster_parent(tb, &parent, &table);
+    if (is_fmt) reconstruct(tb, parent);
+    FNode *n = new_element(tb, t->tag, t->name, t->attrs);
+    foster_place(tb, parent, table, n);
+    if (!t->self_closing && !HAS(t->tag, F_VOID)) {
+        tb_push(tb, n);
+        if (is_fmt) fmt_push(tb, t->tag, t->name, n);
+    }
+    return A_CHECK;
+}
+
+/* IN_TABLE start tags shared by both loops except <form>, <tr>/cells
+   and the foster fallback; returns A_NONE when not handled */
+static int
+start_tag_in_table_common(TB *tb, FTok *t)
+{
+    switch (t->tag) {
+    case TAG_caption:
+        tb_push(tb, insert_el(tb, t));
+        fmt_push_marker(tb);
+        tb->mode = M_IN_CAPTION;
+        return A_CHECK;
+    case TAG_colgroup:
+        tb_push(tb, insert_el(tb, t));
+        return A_CHECK;
+    case TAG_col:
+        insert_el(tb, t);
+        return A_CHECK;
+    case TAG_select:
+        tb_push(tb, insert_el(tb, t));
+        tb->mode = M_IN_SELECT_IN_TABLE;
+        return A_CHECK;
+    case TAG_tbody: case TAG_thead: case TAG_tfoot:
+        tb_push(tb, insert_el(tb, t));
+        tb->mode = M_IN_TABLE_BODY;
+        return A_CHECK;
+    default:
+        return A_NONE;
+    }
+}
+
+/* TreeBuilder._start_tag_in_table_document */
+static int
+start_tag_in_table_document(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    if (tag == TAG_form) {
+        if (tb->form_ptr && !in_template_context(tb)) {
+            tb_err(tb, E_START_TAG);
+            return A_CHECK;
+        }
+        tb_err(tb, E_FOSTER);
+        FNode *parent, *table;
+        foster_parent(tb, &parent, &table);
+        FNode *n = new_element(tb, t->tag, t->name, t->attrs);
+        foster_place(tb, parent, table, n);
+        if (!in_template_context(tb)) tb->form_ptr = n;
+        tb_push(tb, n);
+        return A_CHECK;
+    }
+    int act = start_tag_in_table_common(tb, t);
+    if (act != A_NONE) return act;
+    if (tag == TAG_tr) {
+        /* reference deviation: NO implicit tbody in document mode */
+        tb_push(tb, insert_el(tb, t));
+        tb->mode = M_IN_ROW;
+        return A_CHECK;
+    }
+    if (HAS(tag, F_CELL)) {
+        tb_push(tb, insert_el(tb, t));
+        fmt_push_marker(tb);
+        tb->mode = M_IN_CELL;
+        return A_CHECK;
+    }
+    if (is_hidden_input(t)) {
+        tb_err(tb, E_START_IN_TABLE);
+        insert_el(tb, t);
+        return A_CHECK;
+    }
+    if (!HAS(tag, F_TABLE_EL)) return foster_start_tag(tb, t);
+    return A_CHECK;
+}
+
+/* TreeBuilder._start_tag_document */
+static int
+start_tag_document(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    if (tb->mode == M_INITIAL) {
+        tb_err(tb, E_NO_DOCTYPE);
+        tb->dmode = DM_QUIRKS;
+        tb->mode = M_BEFORE_HTML;
+    }
+    if (tb->mode == M_BEFORE_HTML) {
+        if (tag == TAG_html) {
+            ensure_html(tb);
+            tb->mode = M_IN_HEAD;
+            return A_CHECK;
+        }
+        ensure_html(tb);
+        if (tag == TAG_head) {
+            tb->head = new_element(tb, TAG_head, t->name, t->attrs);
+            append_child(tb, tb->html, tb->head);
+            tb_push(tb, tb->head);
+            tb->mode = M_IN_HEAD;
+            return A_CHECK;
+        }
+        ensure_body(tb);
+        tb->mode = M_IN_BODY;
+        return A_REPROCESS;
+    }
+    if (tb->mode == M_IN_HEAD) {
+        if (tag == TAG_head) {
+            if (!tb->head) {
+                tb->head = new_element(tb, TAG_head, t->name, t->attrs);
+                append_child(tb, ensure_html(tb), tb->head);
+                tb_push(tb, tb->head);
+            } else {
+                tb_err(tb, E_START_TAG);
+            }
+            return A_CHECK;
+        }
+        if (tag == TAG_body) {
+            close_head(tb);
+            ensure_body(tb);
+            return A_CHECK;
+        }
+        if (tag == TAG_template) {
+            FNode *tmpl = create_template(tb, t->attrs);
+            append_child(tb, tb_current(tb), tmpl);
+            open_template(tb, tmpl, t->self_closing);
+            return A_CHECK;
+        }
+        if (tag == TAG_noscript) {
+            tb_push(tb, insert_el(tb, t));
+            tb->mode = M_IN_HEAD_NOSCRIPT;
+            return A_CHECK;
+        }
+        if (!HAS(tag, F_HEAD_EL)) {
+            close_head(tb);
+            return A_REPROCESS;
+        }
+    }
+    if (tb->mode == M_IN_TABLE || tb->mode == M_IN_TABLE_TEXT
+            || tb->mode == M_IN_TABLE_BODY || tb->mode == M_IN_ROW
+            || tb->mode == M_IN_CELL) {
+        FNode *cur = tb_current(tb);
+        if (cur->type == N_ELEMENT && !HAS(cur->tag, F_TABLE_EL)) {
+            in_body_start_document(tb, t);
+            return A_CHECK;
+        }
+    }
+    switch (tb->mode) {
+    case M_IN_BODY:
+        in_body_start_document(tb, t);
+        return A_CHECK;
+    case M_IN_TABLE:
+        return start_tag_in_table_document(tb, t);
+    case M_IN_HEAD:
+        if (tag == TAG_meta)   /* the §13.2.3.5 re-encode handshake */
+            tb_fail(tb, "tree-meta");
+        insert_el_push(tb, t);
+        return A_CHECK;
+    case M_IN_TABLE_BODY:
+        if (HAS(tag, F_SECTION)) {
+            if (has_open_table_section(tb)) {
+                pop_until(tb, TAG_thead, NULL);
+                pop_until(tb, TAG_tbody, NULL);
+                pop_until(tb, TAG_tfoot, NULL);
+            }
+            tb->mode = M_IN_TABLE;
+            return A_REPROCESS;
+        }
+        if (tag == TAG_tr) {
+            tb_push(tb, insert_el(tb, t));
+            tb->mode = M_IN_ROW;
+            return A_CHECK;
+        }
+        if (HAS(tag, F_CELL)) {
+            insert_row_and_cell(tb, t);
+            return A_CHECK;
+        }
+        if (!HAS(tag, F_TABLE_EL)) return foster_start_tag(tb, t);
+        return A_CHECK;
+    case M_IN_ROW:
+        if (HAS(tag, F_CELL)) {
+            tb_push(tb, insert_el(tb, t));
+            fmt_push_marker(tb);
+            tb->mode = M_IN_CELL;
+            return A_CHECK;
+        }
+        if (HAS(tag, F_SECTION)) {
+            if (has_open(tb, TAG_tr, NULL)) pop_until(tb, TAG_tr, NULL);
+            tb->mode = M_IN_TABLE_BODY;
+            return A_REPROCESS;
+        }
+        if (!HAS(tag, F_TABLE_EL)) return foster_start_tag(tb, t);
+        return A_CHECK;
+    case M_IN_CELL:
+        if (tag == TAG_select) {
+            tb_push(tb, insert_el(tb, t));
+            tb->mode = M_IN_SELECT_IN_TABLE;
+            return A_CHECK;
+        }
+        if (HAS(tag, F_CELL)) {
+            close_cell(tb);
+            tb->mode = M_IN_ROW;
+            return A_REPROCESS;
+        }
+        if (tag == TAG_tr || HAS(tag, F_SECTION)) {
+            close_cell(tb);
+            tb->mode = M_IN_TABLE_BODY;
+            return A_REPROCESS;
+        }
+        in_body_start_document(tb, t);
+        return A_CHECK;
+    case M_IN_CAPTION:
+        if (tag == TAG_table || tag == TAG_tr || HAS(tag, F_SECTION)) {
+            pop_until(tb, TAG_caption, NULL);
+            tb->mode = M_IN_TABLE;
+            return A_REPROCESS;
+        }
+        if (tag == TAG_template) {
+            FNode *tmpl = create_template(tb, t->attrs);
+            append_child(tb, tb_current(tb), tmpl);
+            open_template(tb, tmpl, t->self_closing);
+            return A_CHECK;
+        }
+        insert_el_push(tb, t);
+        return A_CHECK;
+    case M_IN_SELECT: case M_IN_SELECT_IN_TABLE:
+        return start_tag_in_select(tb, t, 1);
+    default:
+        return A_CHECK;
+    }
+}
+
+/* TreeBuilder._end_tag_form (shared by both loops) */
+static int
+end_tag_form(TB *tb)
+{
+    if (!in_template_context(tb)) {
+        FNode *node = tb->form_ptr;
+        tb->form_ptr = NULL;
+        if (!node || !in_scope(tb, TAG_form, NULL)) {
+            tb_err(tb, E_END_TAG);
+            if (!node) return A_CHECK;
+            if (!in_scope(tb, TAG_form, NULL)) return A_CHECK;
+        }
+        gen_implied(tb, -1);
+        int i = stack_index(tb, node);
+        if (i >= 0) stack_remove_at(tb, i);
+    } else {
+        if (!in_scope(tb, TAG_form, NULL)) {
+            tb_err(tb, E_END_TAG);
+        } else {
+            gen_implied(tb, -1);
+            pop_until(tb, TAG_form, NULL);
+        }
+    }
+    return A_CHECK;
+}
+
+/* </p>, </li>, </dd>, </dt> in IN_BODY (both loops); A_NONE if the
+   name is none of them */
+static int
+end_tag_body_items(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    if (tag == TAG_p) {
+        if (!in_button_scope(tb, TAG_p)) {
+            tb_err(tb, E_END_TAG);
+            append_child(tb, tb_current(tb),
+                         new_element(tb, TAG_p, NULL, NULL));
+            return A_CHECK;
+        }
+        gen_implied(tb, TAG_p);
+        pop_until(tb, TAG_p, NULL);
+        return A_CHECK;
+    }
+    if (tag == TAG_li) {
+        if (!in_li_scope(tb, TAG_li)) {
+            tb_err(tb, E_END_TAG);
+            return A_CHECK;
+        }
+        gen_implied(tb, TAG_li);
+        pop_until(tb, TAG_li, NULL);
+        return A_CHECK;
+    }
+    if (tag == TAG_dd || tag == TAG_dt) {
+        if (!in_scope(tb, tag, NULL)) {
+            tb_err(tb, E_END_TAG);
+            return A_CHECK;
+        }
+        gen_implied(tb, tag);
+        pop_until(tb, tag, NULL);
+        return A_CHECK;
+    }
+    return A_NONE;
+}
+
+static int
+is_aaa_mode(int mode)
+{
+    return mode == M_IN_BODY || mode == M_IN_CELL || mode == M_IN_TABLE
+        || mode == M_IN_TABLE_BODY || mode == M_IN_ROW
+        || mode == M_IN_CAPTION;
+}
+
+/* the shared end-tag tail: adoption agency, then in-scope pop */
+static int
+end_tag_tail(TB *tb, FTok *t)
+{
+    if (is_aaa_mode(tb->mode) && adoption_agency(tb, t->tag, t->name))
+        return A_CHECK;
+    if (!in_scope(tb, t->tag, t->name)) {
+        tb_err(tb, E_END_TAG);
+        return A_CHECK;
+    }
+    pop_until(tb, t->tag, t->name);
+    return A_CHECK;
+}
+
+/* </select> in the select modes (both loops) */
+static int
+end_tag_select(TB *tb)
+{
+    if (!in_select_scope(tb, TAG_select)) {
+        tb_err(tb, E_END_TAG);
+        return A_CHECK;
+    }
+    pop_until(tb, TAG_select, NULL);
+    tb->mode = reset_insertion_mode(tb);
+    return A_CHECK;
+}
+
+/* TreeBuilder._end_tag_document */
+static int
+end_tag_document(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    int mode = tb->mode;
+    if (tag == TAG_template && has_open(tb, TAG_template, NULL)) {
+        close_template(tb);
+        return A_CHECK;
+    }
+    if (tag == TAG_head && mode == M_IN_HEAD) {
+        close_head(tb);
+        return A_CHECK;
+    }
+    if (tag == TAG_body && mode == M_IN_BODY) {
+        gen_implied(tb, -1);
+        FNode *cur = tb_top(tb);
+        if (!cur || !IS(cur, TAG_body)) tb_err(tb, E_END_UNCLOSED);
+        pop_until(tb, TAG_body, NULL);
+        tb->mode = M_AFTER_BODY;
+        return A_CHECK;
+    }
+    if (tag == TAG_form && mode == M_IN_BODY)
+        return end_tag_form(tb);
+    if (mode == M_IN_BODY) {
+        int act = end_tag_body_items(tb, t);
+        if (act != A_NONE) return act;
+    }
+    if (tag == TAG_table) {
+        if (!in_table_scope(tb, TAG_table, NULL)) return A_CHECK;
+        if (mode == M_IN_CELL) fmt_clear_to_marker(tb);
+        pop_until(tb, TAG_table, NULL);
+        tb->mode = M_IN_BODY;
+        return A_CHECK;
+    }
+    if (tag == TAG_tr && mode == M_IN_ROW
+            && in_table_scope(tb, TAG_tr, NULL)) {
+        pop_until(tb, TAG_tr, NULL);
+        tb->mode = has_open_table_section(tb) ? M_IN_TABLE_BODY : M_IN_TABLE;
+        return A_CHECK;
+    }
+    if (HAS(tag, F_CELL) && mode == M_IN_CELL
+            && in_table_scope(tb, tag, NULL)) {
+        pop_until(tb, tag, NULL);
+        fmt_clear_to_marker(tb);
+        tb->mode = M_IN_ROW;
+        return A_CHECK;
+    }
+    if (HAS(tag, F_SECTION) && mode == M_IN_CELL
+            && in_table_scope(tb, tag, NULL)) {
+        close_cell(tb);
+        pop_until(tb, tag, NULL);
+        tb->mode = M_IN_TABLE;
+        return A_CHECK;
+    }
+    if (HAS(tag, F_SECTION)
+            && (mode == M_IN_TABLE || mode == M_IN_TABLE_BODY)
+            && in_table_scope(tb, tag, NULL)) {
+        pop_until(tb, tag, NULL);
+        tb->mode = M_IN_TABLE;
+        return A_CHECK;
+    }
+    if (tag == TAG_caption && mode == M_IN_CAPTION
+            && in_table_scope(tb, TAG_caption, NULL)) {
+        pop_until(tb, TAG_caption, NULL);
+        fmt_clear_to_marker(tb);
+        tb->mode = M_IN_TABLE;
+        return A_CHECK;
+    }
+    if (tag == TAG_select
+            && (mode == M_IN_SELECT || mode == M_IN_SELECT_IN_TABLE))
+        return end_tag_select(tb);
+    if (tag == TAG_applet || tag == TAG_marquee || tag == TAG_object) {
+        if (!in_scope(tb, tag, NULL)) return A_CHECK;
+        gen_implied(tb, -1);
+        pop_until(tb, tag, NULL);
+        fmt_clear_to_marker(tb);
+        return A_CHECK;
+    }
+    if (tag == TAG_html) {
+        pop_until(tb, TAG_html, NULL);
+        if (tb->mode == M_AFTER_BODY) tb->mode = M_AFTER_AFTER_BODY;
+        return A_CHECK;
+    }
+    return end_tag_tail(tb, t);
+}
+
+/* TreeBuilder._character_document */
+static int
+character_document(TB *tb, FTok *t)
+{
+    PyObject *data = t->data;
+    if (!data || !PyUnicode_GET_LENGTH(data)) return A_CHECK;
+    if (is_ws_only(data)) {
+        if (tb->mode == M_IN_BODY) {
+            if (!in_template_context(tb)) ensure_body(tb);
+            reconstruct(tb, tb_current(tb));
+        }
+        return A_CHECK;
+    }
+    if (tb->mode == M_AFTER_BODY || tb->mode == M_AFTER_AFTER_BODY) {
+        tb_err(tb, E_AFTER_BODY);
+        tb->mode = M_IN_BODY;
+    }
+    if (tb->mode == M_IN_HEAD) {
+        if (!tb->head) {
+            tb->head = new_element(tb, TAG_head, NULL, NULL);
+            append_child(tb, ensure_html(tb), tb->head);
+            tb_push(tb, tb->head);
+        }
+        insert_text(tb, tb_current(tb), data);
+        return A_CHECK;
+    }
+    if (tb->mode == M_IN_TABLE) {
+        tb->mode = M_IN_TABLE_TEXT;
+        table_text_add(tb, data);
+        return A_CHECK;
+    }
+    if (tb->mode == M_IN_TABLE_TEXT || tb->mode == M_IN_TABLE_BODY
+            || tb->mode == M_IN_ROW || tb->mode == M_IN_CELL) {
+        FNode *cur = tb_current(tb);
+        if (tb->mode == M_IN_CELL
+                || (cur->type == N_ELEMENT && !HAS(cur->tag, F_TABLE_EL)))
+            insert_text(tb, cur, data);
+        else
+            foster_insert(tb, new_text(tb, data));
+        return A_CHECK;
+    }
+    if (tb->mode == M_INITIAL) {
+        tb_err(tb, E_NO_DOCTYPE);
+        tb->dmode = DM_QUIRKS;
+        tb->mode = M_BEFORE_HTML;
+    }
+    if (tb->mode == M_BEFORE_HTML) {
+        ensure_body(tb);
+        tb->mode = M_IN_BODY;
+    }
+    if (tb->mode == M_IN_BODY) reconstruct(tb, tb_current(tb));
+    insert_text(tb, tb_current(tb), data);
+    return A_CHECK;
+}
+
+/* treebuilder.determine_doc_mode on the DOCTYPE record */
+static int
+doctype_mode(TB *tb, TokRec *r)
+{
+    FastToken *t = PyObject_New(FastToken, &FastToken_Type);
+    if (!t) tb_fail(tb, NULL);
+    t->type = T_DOCTYPE;
+    t->name = r->name ? r->name : Py_None;
+    t->public_id = r->data ? r->data : Py_None;
+    t->system_id = r->attrs ? r->attrs : Py_None;
+    t->data = Py_None;
+    t->attrs = EMPTY_ATTRS;
+    Py_INCREF(t->name); Py_INCREF(t->public_id); Py_INCREF(t->system_id);
+    Py_INCREF(t->data); Py_INCREF(t->attrs);
+    t->self_closing = 0;
+    t->force_quirks = r->force_quirks;
+    PyObject *res = PyObject_CallOneArg(tb->doc_mode_fn, (PyObject *)t);
+    Py_DECREF(t);
+    if (!res) tb_fail(tb, NULL);
+    long m = PyLong_AsLong(res);
+    Py_DECREF(res);
+    if (m == -1 && PyErr_Occurred()) tb_fail(tb, NULL);
+    return (int)m;
+}
+
+static int
+dispatch_document(TB *tb, FTok *t)
+{
+    int act = pre_switch(tb, t);
+    if (act != A_NONE) return act;
+    switch (t->type) {
+    case T_START:
+        if (tb->mode == M_IN_BODY) {
+            in_body_start_document(tb, t);
+            return A_CHECK;
+        }
+        return start_tag_document(tb, t);
+    case T_CHAR:
+        return character_document(tb, t);
+    case T_END:
+        return end_tag_document(tb, t);
+    case T_COMMENT:
+        insert_comment(tb, tb_current(tb));
+        return A_CHECK;
+    case T_EOF:
+        switch (tb->mode) {
+        case M_INITIAL:
+            tb_err(tb, E_EOF_DOCTYPE);
+            tb->dmode = DM_QUIRKS;
+            tb->mode = M_BEFORE_HTML;
+            return A_REPROCESS;
+        case M_BEFORE_HTML:
+            ensure_body(tb);
+            tb->mode = M_IN_BODY;
+            return A_REPROCESS;
+        case M_IN_HEAD:
+            close_head(tb);
+            return A_REPROCESS;
+        default:
+            return eof_common(tb);
+        }
+    case T_DOCTYPE:
+        if (tb->mode != M_INITIAL) {
+            tb_err(tb, E_STRAY_DOCTYPE);
+            return A_CHECK;
+        }
+        append_child(tb, tb->doc, new_node(tb, N_DOCTYPE));
+        tb->dmode = doctype_mode(tb, t->rec);
+        tb->mode = M_BEFORE_HTML;
+        return A_CHECK;
+    }
+    return A_STOP;
+}
+
+/* ================= fragment loop (TreeBuilder._dispatch_fragment) === */
+
+/* TreeBuilder._foster_start_tag_fragment: no reconstruct, no
+   formatting push */
+static int
+foster_start_tag_fragment(TB *tb, FTok *t)
+{
+    if (t->tag == TAG_template) {
+        foster_template(tb, t);
+        return A_CHECK;
+    }
+    FNode *n = new_element(tb, t->tag, t->name, t->attrs);
+    foster_insert(tb, n);
+    if (!t->self_closing && !HAS(t->tag, F_VOID)) tb_push(tb, n);
+    return A_CHECK;
+}
+
+/* TreeBuilder._start_tag_fragment */
+static int
+start_tag_fragment(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    if (tb->mode == M_IN_HEAD) {
+        if (tag == TAG_template) {
+            FNode *tmpl = create_template(tb, t->attrs);
+            append_child(tb, tb_current(tb), tmpl);
+            open_template(tb, tmpl, t->self_closing);
+            return A_CHECK;
+        }
+        if (tag == TAG_noscript) {
+            tb_push(tb, insert_el(tb, t));
+            tb->mode = M_IN_HEAD_NOSCRIPT;
+            return A_CHECK;
+        }
+        if (!HAS(tag, F_HEAD_EL)) {
+            tb->mode = M_IN_BODY;
+            return A_REPROCESS;
+        }
+    }
+    if (tb->mode == M_IN_TABLE || tb->mode == M_IN_TABLE_TEXT
+            || tb->mode == M_IN_TABLE_BODY || tb->mode == M_IN_ROW
+            || tb->mode == M_IN_CELL) {
+        FNode *cur = tb_current(tb);
+        if (cur->type == N_ELEMENT && !HAS(cur->tag, F_TABLE_EL)) {
+            in_body_start_fragment(tb, t);
+            return A_CHECK;
+        }
+    }
+    switch (tb->mode) {
+    case M_IN_BODY:
+        in_body_start_fragment(tb, t);
+        return A_CHECK;
+    case M_IN_TABLE: {
+        int act = start_tag_in_table_common(tb, t);
+        if (act != A_NONE) return act;
+        if (tag == TAG_tr || HAS(tag, F_CELL)) {
+            /* fragment mode DOES synthesize the implicit tbody */
+            FNode *n = new_element(tb, TAG_tbody, NULL, NULL);
+            append_child(tb, tb_current(tb), n);
+            tb_push(tb, n);
+            tb->mode = M_IN_TABLE_BODY;
+            return A_REPROCESS;
+        }
+        if (is_hidden_input(t)) {
+            tb_err(tb, E_START_IN_TABLE);
+            insert_el(tb, t);
+            return A_CHECK;
+        }
+        if (!HAS(tag, F_TABLE_EL)) return foster_start_tag_fragment(tb, t);
+        return A_CHECK;
+    }
+    case M_IN_TABLE_BODY:
+        if (tag == TAG_tr) {
+            tb_push(tb, insert_el(tb, t));
+            tb->mode = M_IN_ROW;
+            return A_CHECK;
+        }
+        if (HAS(tag, F_CELL)) {
+            insert_row_and_cell(tb, t);
+            return A_CHECK;
+        }
+        if (!HAS(tag, F_TABLE_EL)) return foster_start_tag_fragment(tb, t);
+        return A_CHECK;
+    case M_IN_ROW:
+        if (HAS(tag, F_CELL)) {
+            tb_push(tb, insert_el(tb, t));
+            fmt_push_marker(tb);
+            tb->mode = M_IN_CELL;
+            return A_CHECK;
+        }
+        if (!HAS(tag, F_TABLE_EL)) return foster_start_tag_fragment(tb, t);
+        return A_CHECK;
+    case M_IN_CELL:
+        if (HAS(tag, F_CELL)) {
+            close_cell(tb);
+            tb->mode = M_IN_ROW;
+            return A_REPROCESS;
+        }
+        if (tag == TAG_select) {
+            tb_push(tb, insert_el(tb, t));
+            tb->mode = M_IN_SELECT_IN_TABLE;
+            return A_CHECK;
+        }
+        in_body_start_fragment(tb, t);
+        return A_CHECK;
+    case M_IN_CAPTION:
+        if (tag == TAG_table) {
+            pop_until(tb, TAG_caption, NULL);
+            tb->mode = M_IN_TABLE;
+            return A_REPROCESS;
+        }
+        if (tag == TAG_template) {
+            FNode *tmpl = create_template(tb, t->attrs);
+            append_child(tb, tb_current(tb), tmpl);
+            open_template(tb, tmpl, t->self_closing);
+            return A_CHECK;
+        }
+        insert_el_push(tb, t);
+        return A_CHECK;
+    case M_IN_SELECT: case M_IN_SELECT_IN_TABLE:
+        return start_tag_in_select(tb, t, 0);
+    default:
+        return A_CHECK;
+    }
+}
+
+/* TreeBuilder._end_tag_fragment */
+static int
+end_tag_fragment(TB *tb, FTok *t)
+{
+    short tag = t->tag;
+    int mode = tb->mode;
+    if (tag == TAG_template && has_open(tb, TAG_template, NULL)) {
+        close_template(tb);
+        return A_CHECK;
+    }
+    if (tag == TAG_form && mode == M_IN_BODY)
+        return end_tag_form(tb);
+    if (mode == M_IN_BODY) {
+        int act = end_tag_body_items(tb, t);
+        if (act != A_NONE) return act;
+    }
+    if (tag == TAG_table && in_table_scope(tb, TAG_table, NULL)) {
+        if (mode == M_IN_CELL) fmt_clear_to_marker(tb);
+        pop_until(tb, TAG_table, NULL);
+        tb->mode = M_IN_BODY;
+        return A_CHECK;
+    }
+    if (HAS(tag, F_CELL) && mode == M_IN_CELL
+            && in_table_scope(tb, tag, NULL)) {
+        pop_until(tb, tag, NULL);
+        fmt_clear_to_marker(tb);
+        tb->mode = M_IN_ROW;
+        return A_CHECK;
+    }
+    if (tag == TAG_tr && mode == M_IN_ROW
+            && in_table_scope(tb, TAG_tr, NULL)) {
+        pop_until(tb, TAG_tr, NULL);
+        tb->mode = (has_open(tb, TAG_tbody, NULL)
+                    || has_open(tb, TAG_thead, NULL)
+                    || has_open(tb, TAG_tfoot, NULL))
+                   ? M_IN_TABLE_BODY : M_IN_TABLE;
+        return A_CHECK;
+    }
+    if (HAS(tag, F_SECTION) && mode == M_IN_TABLE_BODY
+            && in_table_scope(tb, tag, NULL)) {
+        pop_until(tb, tag, NULL);
+        tb->mode = M_IN_TABLE;
+        return A_CHECK;
+    }
+    if (tag == TAG_caption && mode == M_IN_CAPTION
+            && in_table_scope(tb, TAG_caption, NULL)) {
+        pop_until(tb, TAG_caption, NULL);
+        fmt_clear_to_marker(tb);
+        tb->mode = M_IN_TABLE;
+        return A_CHECK;
+    }
+    if (tag == TAG_select
+            && (mode == M_IN_SELECT || mode == M_IN_SELECT_IN_TABLE))
+        return end_tag_select(tb);
+    return end_tag_tail(tb, t);
+}
+
+/* TreeBuilder._character_fragment */
+static int
+character_fragment(TB *tb, FTok *t)
+{
+    PyObject *data = t->data;
+    if (!data || !PyUnicode_GET_LENGTH(data)) return A_CHECK;
+    if (is_ws_only(data)) {
+        if (tb->mode == M_IN_BODY) reconstruct(tb, tb_current(tb));
+        return A_CHECK;
+    }
+    if (tb->mode == M_IN_TABLE) {
+        tb->mode = M_IN_TABLE_TEXT;
+        table_text_add(tb, data);
+        return A_CHECK;
+    }
+    if (tb->mode == M_IN_TABLE_TEXT || tb->mode == M_IN_TABLE_BODY
+            || tb->mode == M_IN_ROW || tb->mode == M_IN_CELL) {
+        FNode *cur = tb_current(tb);
+        if (tb->mode == M_IN_CELL
+                || (cur->type == N_ELEMENT && !HAS(cur->tag, F_TABLE_EL)))
+            insert_text(tb, cur, data);
+        else
+            foster_insert(tb, new_text(tb, data));
+        return A_CHECK;
+    }
+    if (tb->mode == M_IN_BODY) reconstruct(tb, tb_current(tb));
+    insert_text(tb, tb_current(tb), data);
+    return A_CHECK;
+}
+
+static int
+dispatch_fragment(TB *tb, FTok *t)
+{
+    int act = pre_switch(tb, t);
+    if (act != A_NONE) return act;
+    switch (t->type) {
+    case T_START:
+        return start_tag_fragment(tb, t);
+    case T_CHAR:
+        return character_fragment(tb, t);
+    case T_END:
+        return end_tag_fragment(tb, t);
+    case T_COMMENT:
+        insert_comment(tb, tb_current(tb));
+        return A_CHECK;
+    case T_EOF:
+        return eof_common(tb);
+    }
+    /* a DOCTYPE token stops the fragment loop (the C switch default) */
+    return A_STOP;
+}
+
+/* -- drive loop (TreeBuilder._run) -- */
+
+static void
+tb_run(TB *tb, TokRec *recs, Py_ssize_t n)
+{
+    int (*dispatch)(TB *, FTok *) =
+        tb->fragment ? dispatch_fragment : dispatch_document;
+    Py_ssize_t i = 0;
+    for (;;) {
+        FTok t = {T_EOF, TAG_OTHER, NULL, NULL, NULL, 0, NULL};
+        if (i < n) {
+            TokRec *r = &recs[i++];
+            if (r->errs) {
+                /* tokenizer-side errors surface at pull time, before
+                   the builder sees the token (FastFeed_next) */
+                Py_ssize_t m = PyList_GET_SIZE(r->errs);
+                tb->errs = tb_grow(tb, tb->errs, &tb->cap_errs,
+                                   tb->n_errs + m, sizeof(PyObject *));
+                for (Py_ssize_t k = 0; k < m; k++)
+                    tb->errs[tb->n_errs++] = PyList_GET_ITEM(r->errs, k);
+            }
+            t.type = r->type;
+            t.name = r->name;
+            t.data = r->data;
+            t.attrs = r->attrs;
+            t.self_closing = r->self_closing;
+            t.rec = r;
+            tb->tz_state = r->state_after;
+            if (t.type == T_START || t.type == T_END) {
+                t.tag = tag_of(r->name);
+                if (t.type == T_START) {
+                    if (t.tag == TAG_svg || t.tag == TAG_math)
+                        tb_fail(tb, "tree-foreign");
+                    if (t.tag == TAG_frameset)
+                        tb_fail(tb, "tree-frameset");
+                }
+            }
+        }
+        int act = dispatch(tb, &t);
+        while (act == A_REPROCESS) act = dispatch(tb, &t);
+        if (act == A_CHECK) {
+            /* MODE_TEXT entry after a start tag */
+            if (t.type == T_START && tb->mode != M_TEXT
+                    && (tb->tz_state == S_RCDATA
+                        || tb->tz_state == S_RAWTEXT
+                        || tb->tz_state == S_SCRIPT)) {
+                tb->original_mode = tb->mode;
+                tb->mode = M_TEXT;
+            }
+        } else if (act == A_STOP) {
+            return;
+        }
+    }
+}
+
+/* the end of build_document / build_fragment: clear the stack, adopt
+   the fragment context's children, flush pending table text */
+static void
+tb_finish(TB *tb)
+{
+    tb->nst = 0;
+    if (tb->context) {
+        for (FNode *c = tb->doc->first; c; c = c->next) c->parent = NULL;
+        tb->doc->first = tb->doc->last = NULL;
+        reparent_children(tb->context, tb->doc);
+    }
+    if (tb->mode == M_IN_TABLE_TEXT && tb->n_tt) {
+        /* the stack is empty: the foster parent and the current node
+           are both the document */
+        insert_text(tb, tb->doc, table_text_join(tb));
+        tb->n_tt = 0;
+    }
+}
+
+/* extract.extract_text_with_spans + count_nodes over the arena tree:
+   returns (text, spans, node_count) */
+static PyObject *
+tb_extract(TB *tb)
+{
+    Py_ssize_t cap = 64, depth = 0, nodes = 0, total = 0;
+    Py_UCS4 maxchar = 0;
+    PyObject *spans = PyList_New(0);
+    PyObject **paths = PyMem_Calloc(cap, sizeof(PyObject *));
+    FNode **chain = PyMem_Calloc(cap, sizeof(FNode *));
+    PyObject *texts = PyList_New(0);
+    PyObject *out = NULL;
+    if (!spans || !paths || !chain || !texts) {
+        if (!PyErr_Occurred()) PyErr_NoMemory();
+        goto done;
+    }
+    /* preorder walk; chain[d] is the node at depth d, paths[d] its
+       lazily built element path ("" for the document) */
+    FNode *n = tb->doc;
+    chain[0] = n;
+    for (;;) {
+        nodes++;
+        if (n->type == N_TEXT && n->data && PyUnicode_GET_LENGTH(n->data)) {
+            /* path of the enclosing element chain, built on demand */
+            Py_ssize_t d = depth - 1, k = d;
+            while (k > 0 && !paths[k]) k--;
+            if (!paths[0]) {
+                paths[0] = PyUnicode_FromStringAndSize("", 0);
+                if (!paths[0]) goto done;
+            }
+            for (k = k + 1; k <= d; k++) {
+                FNode *e = chain[k];
+                if (e->type != N_ELEMENT) {
+                    Py_INCREF(paths[k - 1]);
+                    paths[k] = paths[k - 1];
+                } else if (PyUnicode_GET_LENGTH(paths[k - 1]) == 0) {
+                    Py_INCREF(e->name);
+                    paths[k] = e->name;
+                } else {
+                    paths[k] = PyUnicode_FromFormat("%U/%U", paths[k - 1],
+                                                    e->name);
+                    if (!paths[k]) goto done;
+                }
+            }
+            Py_ssize_t len = PyUnicode_GET_LENGTH(n->data);
+            PyObject *sp = PyDict_New();
+            PyObject *a = PyLong_FromSsize_t(total);
+            PyObject *b = PyLong_FromSsize_t(total + len);
+            int bad = !sp || !a || !b
+                || PyDict_SetItem(sp, KEY_START, a) < 0
+                || PyDict_SetItem(sp, KEY_END, b) < 0
+                || PyDict_SetItem(sp, KEY_PATH, paths[d]) < 0
+                || PyList_Append(spans, sp) < 0
+                || PyList_Append(texts, n->data) < 0;
+            Py_XDECREF(sp); Py_XDECREF(a); Py_XDECREF(b);
+            if (bad) goto done;
+            Py_UCS4 mc = PyUnicode_MAX_CHAR_VALUE(n->data);
+            if (mc > maxchar) maxchar = mc;
+            total += len;
+        }
+        if (n->first) {
+            depth++;
+            if (depth >= cap) {
+                Py_ssize_t nc = cap * 2;
+                PyObject **np = PyMem_Realloc(paths, nc * sizeof(PyObject *));
+                if (!np) { PyErr_NoMemory(); goto done; }
+                paths = np;
+                FNode **nch = PyMem_Realloc(chain, nc * sizeof(FNode *));
+                if (!nch) { PyErr_NoMemory(); goto done; }
+                chain = nch;
+                memset(paths + cap, 0, (nc - cap) * sizeof(PyObject *));
+                cap = nc;
+            }
+            n = n->first;
+            chain[depth] = n;
+            continue;
+        }
+        while (depth > 0 && !n->next) {
+            Py_CLEAR(paths[depth]);
+            depth--;
+            n = chain[depth];
+        }
+        if (depth == 0) break;
+        Py_CLEAR(paths[depth]);
+        n = n->next;
+        chain[depth] = n;
+    }
+    PyObject *text = PyUnicode_New(total, maxchar);
+    if (!text) goto done;
+    Py_ssize_t pos = 0;
+    for (Py_ssize_t k = 0; k < PyList_GET_SIZE(texts); k++) {
+        PyObject *s = PyList_GET_ITEM(texts, k);
+        Py_ssize_t len = PyUnicode_GET_LENGTH(s);
+        if (PyUnicode_CopyCharacters(text, pos, s, 0, len) < 0) {
+            Py_DECREF(text);
+            goto done;
+        }
+        pos += len;
+    }
+    out = Py_BuildValue("(NOn)", text, spans, nodes);
+done:
+    if (paths)
+        for (Py_ssize_t k = 0; k < cap; k++) Py_XDECREF(paths[k]);
+    PyMem_Free(paths);
+    PyMem_Free(chain);
+    Py_XDECREF(spans);
+    Py_XDECREF(texts);
+    return out;
+}
+
+static void
+tb_free(TB *tb)
+{
+    while (tb->arena) {
+        ArenaBlock *b = tb->arena;
+        tb->arena = b->next;
+        PyMem_Free(b);
+    }
+    for (Py_ssize_t k = 0; k < tb->n_owned; k++) Py_DECREF(tb->owned[k]);
+    PyMem_Free(tb->owned);
+    PyMem_Free(tb->errs);
+    PyMem_Free(tb->tt);
+}
+
+/* context tags whose fragment build does not start in IN_BODY
+   (treebuilder._RCDATA_FRAGMENT_MODES plus template) */
+static int
+context_supported(PyObject *ctx)
+{
+    static const char *other[] = {"table", "tbody", "thead", "tfoot", "tr",
+                                  "td", "th", "caption", "select", "head",
+                                  "template", NULL};
+    for (int k = 0; other[k]; k++)
+        if (PyUnicode_CompareWithASCIIString(ctx, other[k]) == 0) return 0;
+    return 1;
+}
+
+/* fused_build(text, errors, decode_fn, doc_mode_fn, document, context)
+   -> (extracted_text, spans, node_count) with the error texts appended
+   to `errors`; a FastFeed over the same records when the tree builder
+   bails; None when the scanner bails.  bail_reason() names the bail. */
+static PyObject *
+fused_build(PyObject *Py_UNUSED(mod), PyObject *args)
+{
+    PyObject *text, *errors, *decode_fn, *doc_mode_fn, *context;
+    int document;
+    last_bail = NULL;
+    if (!PyArg_ParseTuple(args, "UO!OOpO", &text, &PyList_Type, &errors,
+                          &decode_fn, &doc_mode_fn, &document, &context))
+        return NULL;
+    if (PyUnicode_READY(text) < 0)
+        return NULL;
+    if (context != Py_None && !PyUnicode_Check(context)) {
+        PyErr_SetString(PyExc_TypeError, "context must be str or None");
+        return NULL;
+    }
+    Scan sc;
+    int rc = scan_text(&sc, text, decode_fn);
+    if (rc < 0) return NULL;
+    if (rc > 0) {
+        last_bail = sc.bail;
+        Py_RETURN_NONE;
+    }
+
+    TB *tb = PyMem_Calloc(1, sizeof(TB));
+    if (!tb) {
+        recbuf_clear(&sc.rb);
+        PyMem_Free(sc.skips);
+        return PyErr_NoMemory();
+    }
+    PyObject *volatile result = NULL;
+    if (setjmp(tb->fail) == 0) {
+        int use_ctx = !document && context != Py_None
+            && PyUnicode_GET_LENGTH(context) > 0;
+        if (use_ctx && !context_supported(context))
+            tb_fail(tb, "tree-context");
+        tb->fragment = !document;
+        tb->doc_mode_fn = doc_mode_fn;
+        tb->doc = new_node(tb, N_DOCUMENT);
+        tb->mode = tb->original_mode = document ? M_INITIAL : M_IN_BODY;
+        if (use_ctx) {
+            tb->context = new_element(tb, tag_of(context), context, NULL);
+            tb_push(tb, tb->context);
+        }
+        tb_run(tb, sc.rb.recs, sc.rb.n);
+        tb_finish(tb);
+        result = tb_extract(tb);
+        if (result) {
+            for (Py_ssize_t k = 0; k < tb->n_errs; k++) {
+                if (PyList_Append(errors, tb->errs[k]) < 0) {
+                    Py_CLEAR(result);
+                    break;
+                }
+            }
+        }
+    } else if (tb->bail) {
+        last_bail = tb->bail;
+    }
+    tb_free(tb);
+    PyMem_Free(tb);
+    if (last_bail)   /* hand the records to the Python builder */
+        return feed_from_scan(&sc, text, errors);
+    recbuf_clear(&sc.rb);
+    PyMem_Free(sc.skips);
+    return result;
+}
+
+/* tag table, tag-set flags and constant strings for the fused builder */
+static int
+fused_init(void)
+{
+    TAG_IDS = PyDict_New();
+    if (!TAG_IDS) return -1;
+    for (int t = 1; t < TAG_COUNT; t++) {
+        TAG_NAME[t] = PyUnicode_InternFromString(TAG_STR[t]);
+        PyObject *id = PyLong_FromLong(t);
+        if (!TAG_NAME[t] || !id
+                || PyDict_SetItem(TAG_IDS, TAG_NAME[t], id) < 0) {
+            Py_XDECREF(id);
+            return -1;
+        }
+        Py_DECREF(id);
+    }
+    for (size_t k = 0; k < sizeof(TAG_SETS) / sizeof(TAG_SETS[0]); k++) {
+        const char *p = TAG_SETS[k].names;
+        while (*p) {
+            const char *e = strchr(p, ' ');
+            size_t len = e ? (size_t)(e - p) : strlen(p);
+            int found = 0;
+            for (int t = 1; t < TAG_COUNT; t++) {
+                if (strlen(TAG_STR[t]) == len
+                        && strncmp(TAG_STR[t], p, len) == 0) {
+                    TAG_FLAGS[t] |= TAG_SETS[k].flag;
+                    found = 1;
+                    break;
+                }
+            }
+            if (!found) {
+                PyErr_SetString(PyExc_SystemError, "tag set names a tag "
+                                "missing from TAG_LIST");
+                return -1;
+            }
+            p += len;
+            while (*p == ' ') p++;
+        }
+    }
+    for (int e = 0; e < E_COUNT; e++) {
+        ERR_OBJ[e] = PyUnicode_InternFromString(ERR_STR[e]);
+        if (!ERR_OBJ[e]) return -1;
+    }
+    KEY_START = PyUnicode_InternFromString("start");
+    KEY_END = PyUnicode_InternFromString("end");
+    KEY_PATH = PyUnicode_InternFromString("path");
+    return (KEY_START && KEY_END && KEY_PATH) ? 0 : -1;
+}
+
+/* ------------------------------------------------------------------ */
+/* module API                                                          */
+/* ------------------------------------------------------------------ */
+
+static PyObject *
 bail_reason(PyObject *Py_UNUSED(mod), PyObject *Py_UNUSED(args))
 {
     if (last_bail == NULL)
@@ -1842,8 +4427,12 @@ bail_reason(PyObject *Py_UNUSED(mod), PyObject *Py_UNUSED(args))
 static PyMethodDef module_methods[] = {
     {"make_feed", make_feed, METH_VARARGS,
      "make_feed(text, errors) -> FastFeed | None"},
+    {"fused_build", fused_build, METH_VARARGS,
+     "fused_build(text, errors, decode_fn, doc_mode_fn, document, context)"
+     " -> (text, spans, node_count) | FastFeed | None"},
     {"bail_reason", bail_reason, METH_NOARGS,
-     "reason string for the most recent make_feed() bail (tests)"},
+     "reason string for the most recent make_feed()/fused_build() bail,"
+     " None after an accepted call"},
     {NULL}
 };
 
@@ -1858,6 +4447,7 @@ PyInit__fastscan(void)
     if (PyType_Ready(&FastFeed_Type) < 0) return NULL;
     EMPTY_ATTRS = PyList_New(0);
     if (!EMPTY_ATTRS) return NULL;
+    if (fused_init() < 0) return NULL;
     PyObject *m = PyModule_Create(&moduledef);
     if (!m) return NULL;
     return m;

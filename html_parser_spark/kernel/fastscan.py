@@ -1,4 +1,5 @@
-"""Loader/integration for the optional C fast-scan tokenizer.
+"""Loader/integration for the optional C fast-scan tokenizer and the
+fused C tree builder.
 
 The accelerator (kernel/_fastscan.c) is an all-or-nothing subset
 scanner: `make_feed(text, errors)` returns a drop-in replacement for
@@ -6,6 +7,17 @@ the Tokenizer drive interface (next()/state/allow_cdata/errors/skipped)
 when the document lies in the provably-token-identical subset, else
 None and the caller uses the pure-Python tokenizer.  See the C file's
 header comment for the exact subset contract.
+
+`fused_extract` scans and then builds the tree in C as well, returning
+the extraction directly (udfs.parse_turn's markup path uses it).  The
+fused subset is every scanner-accepted input except: <svg>/<math>
+start tags (foreign content), a document-mode IN_HEAD <meta> (the
+re-encode handshake), <frameset>, and fragment contexts whose Python
+build does not start in IN_BODY.  On those it hands the scanned
+records back as a FastFeed for the Python builder.  The Python builder
+is kept because it is the only path for those inputs and for scanner
+bails, and it is the oracle the differential tests and perfbench's
+HP_FASTSCAN=0 run compare against.
 
 Build strategy (no Cython/mypyc in this environment; plain cc + the
 CPython headers suffice): compile on first use into a content-hashed
@@ -17,7 +29,8 @@ None and the pure-Python path runs — behavior is identical either way,
 only speed differs.
 
 Env:
-  HP_FASTSCAN=0   disable entirely (pure Python tokenizer)
+  HP_FASTSCAN=0   disable the scanner AND the fused builder (pure Python
+                  tokenizer and tree builder)
 """
 
 from __future__ import annotations
@@ -126,36 +139,83 @@ _NON_DATA_CONTEXTS = frozenset((
 ))
 
 
-def make_feed(input_text: str, errors: list, context_tag: str | None = None):
-    """Return a tokenizer-compatible feed, or None to use the Python
-    tokenizer.  Safe default for every input: bails are silent."""
-    mod = _load()
-    if mod is None or not input_text:
-        return None
+_last_bail: str | None = None
+
+
+def _gate(input_text: str, context_tag: str | None) -> str | None:
+    """make_feed's Python-side gates: the reason an input never reaches
+    the C scanner, or None."""
+    if _load() is None:
+        return "unavailable"
+    if not input_text:
+        return "empty-input"
     if context_tag and context_tag[:31].lower() in _NON_DATA_CONTEXTS:
-        return None
+        return "gate-raw-context"
     if context_tag and "<![CDATA[" in input_text:
         # allow_cdata (builder feedback) can be true from the first
         # token in a foreign-namespace fragment context; the scanner's
         # seen_foreign gate only covers the document path, so any
         # context + a case-exact CDATA opener stays on the Python
         # tokenizer
-        return None
-    try:
-        # the scanner delegates charref-bearing regions to the SAME
-        # decode function the Python tokenizer uses (charref.py), so
-        # decoded text and error strings are identical by construction
-        from .charref import decode_character_references
+        return "gate-fragment-cdata"
+    return None
 
-        return mod.make_feed(input_text, errors,
-                             decode_character_references)
-    except Exception:
+
+def make_feed(input_text: str, errors: list, context_tag: str | None = None):
+    """Return a tokenizer-compatible feed, or None to use the Python
+    tokenizer.  Safe default for every input: bails are silent."""
+    global _last_bail
+    _last_bail = _gate(input_text, context_tag)
+    if _last_bail is not None:
         return None
+    # the scanner delegates charref-bearing regions to the SAME decode
+    # function the Python tokenizer uses (charref.py), so decoded text
+    # and error strings are identical by construction
+    from .charref import decode_character_references
+
+    try:
+        feed = _mod.make_feed(input_text, errors,
+                              decode_character_references)
+    except Exception:
+        _last_bail = "error"
+        return None
+    _last_bail = _mod.bail_reason()
+    return feed
+
+
+def fused_extract(input_text: str, errors: list,
+                  context_tag: str | None = None, document: bool = False):
+    """Scan AND build in C: the extraction of ``input_text`` (already
+    null-replaced) as ``(extracted_text, spans, node_count)``, with the
+    parse-error texts appended to ``errors``, exactly as
+    extract_text_with_spans/count_nodes give them over the Python
+    builder's tree.  document=True is parse_document's str path (UTF-8,
+    tentative confidence); else a fragment in ``context_tag``.
+
+    When the tree builder bails (see the C header: foreign content,
+    <frameset>, an IN_HEAD <meta>, a non-IN_BODY fragment context) the
+    result is the FastFeed over the records already scanned, for
+    build_document/build_fragment(feed=...); None when the scanner
+    itself bails or a gate applies (use the Python tokenizer).
+    bail_reason() names the bail."""
+    global _last_bail
+    _last_bail = _gate(input_text, context_tag)
+    if _last_bail is not None:
+        return None
+    from .charref import decode_character_references
+    from .treebuilder import determine_doc_mode
+
+    got = _mod.fused_build(input_text, errors, decode_character_references,
+                           determine_doc_mode, document, context_tag)
+    _last_bail = _mod.bail_reason()
+    return got
 
 
 def bail_reason() -> str | None:
-    """Reason for the most recent make_feed() bail (test/diagnostics)."""
-    mod = _load()
-    if mod is None:
-        return "unavailable"
-    return mod.bail_reason()
+    """Reason the most recent make_feed()/fused_extract() call did not
+    run its whole input in C, None after an accepted call: a gate
+    (unavailable, empty-input, gate-raw-context, gate-fragment-cdata),
+    a scanner bail, "error" (make_feed's C call raised), or a
+    fused-builder bail (tree-foreign, tree-meta, tree-frameset,
+    tree-context, tree-internal)."""
+    return _last_bail

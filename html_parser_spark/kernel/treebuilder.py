@@ -2613,10 +2613,13 @@ def build_document_from_tokens(tokens, errors=None):
 
 
 def build_document(input_text, encoding=None, confidence=2, errors=None,
-                   want_change_encoding=False):
+                   want_change_encoding=False, feed=None):
     """build_tree_from_input (2927-3918). Returns (doc, change_encoding).
     change_encoding is non-None (and doc is None) when a tentative-
-    confidence parse met a <meta> naming a different charset (§13.2.3.5)."""
+    confidence parse met a <meta> naming a different charset (§13.2.3.5).
+    feed: a token feed already made over input_text and sharing
+    `errors` (a FastFeed handed back by fastscan.fused_extract, or a
+    Tokenizer); None makes one."""
     tb = TreeBuilder(encoding, confidence, errors)
     tb.want_change_encoding = want_change_encoding
     # share ONE error list between tokenizer and tree builder so the
@@ -2624,7 +2627,7 @@ def build_document(input_text, encoding=None, confidence=2, errors=None,
     # The C fast-scan feed is token-identical on its accepted subset
     # (kernel/_fastscan.c header; differential-tested) and returns None
     # otherwise — behavior never depends on which path runs.
-    tz = _fast_feed(input_text, tb.errors)
+    tz = feed if feed is not None else _fast_feed(input_text, tb.errors)
     tb.tz = tz if tz is not None else Tokenizer(
         input_text, errors=tb.errors, reuse_token=True)
     tb._run(tb._dispatch_document)
@@ -2636,8 +2639,8 @@ def build_document(input_text, encoding=None, confidence=2, errors=None,
 
 
 def build_fragment(input_text, context_tag, encoding=None, confidence=2,
-                   errors=None):
-    """build_fragment_from_input (3920-4699)."""
+                   errors=None, feed=None):
+    """build_fragment_from_input (3920-4699). feed: as build_document."""
     tb = TreeBuilder(encoding, confidence, errors)
     tb.want_change_encoding = False
     tb.mode = IN_BODY
@@ -2652,7 +2655,8 @@ def build_fragment(input_text, context_tag, encoding=None, confidence=2,
             tb._push(context)
             tb.mode = _RCDATA_FRAGMENT_MODES.get(context_tag, IN_BODY)
     tb.context = context
-    tz = _fast_feed(input_text, tb.errors, context_tag)
+    tz = feed if feed is not None else _fast_feed(input_text, tb.errors,
+                                                  context_tag)
     tb.tz = tz if tz is not None else Tokenizer(
         input_text, context_tag, errors=tb.errors, reuse_token=True)
     tb._run(tb._dispatch_fragment)

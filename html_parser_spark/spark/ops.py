@@ -2815,8 +2815,8 @@ def winnowing_fingerprints(documents: DataFrame, k: int = 8,
     window's minimum, count the distinct kept fingerprints. The hash is
     md5 of the k-gram (string-ordered minima) so Spark and DuckDB agree
     exactly; at scale everything is a per-row JVM array expression —
-    no shuffle, no UDF. Docs shorter than k get one whole-text
-    fingerprint.
+    no shuffle, no UDF. Docs shorter than k + w - 1 characters get one
+    whole-text fingerprint.
 
     r8: each stage is PROJECTED as a real column (g -> wins -> fps)
     instead of one nested expression. The r7 inline form re-evaluated
@@ -2834,11 +2834,14 @@ def winnowing_fingerprints(documents: DataFrame, k: int = 8,
         lambda i: F.md5(F.col("text").substr(i + 1, F.lit(k))),
     )
     g = F.col("g")
-    windows = F.transform(
+    # fewer than w hashes (text shorter than k + w - 1) has no window:
+    # sequence(0, size - w) would count DOWN and index element 0. Those
+    # rows take the whole-text fingerprint below, so wins stays null.
+    windows = F.when(F.size(g) >= w, F.transform(
         F.sequence(F.lit(0), F.size(g) - w),
         lambda j: F.least(
             *[F.element_at(g, j + (x + 1)) for x in range(w)]),
-    )
+    ))
     base = (
         _spread(documents)
         .select("doc_id", "text", grams.alias("g"))

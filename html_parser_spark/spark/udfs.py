@@ -13,6 +13,15 @@ charref-decoded value either becomes the single TEXT node (non-ws) or
 is dropped (ws-only). ``fast_extract`` reproduces that exactly;
 tests/test_kernel_units.py and tests/test_properties.py property-check
 it against the full parse.
+
+Markup turns (non-boilerplate) go to the fused C scan + tree build
+(kernel/fastscan.fused_extract, kernel/_fastscan.c), which returns the
+extraction without building Python nodes. Inputs outside its subset —
+scanner bails, foreign content, a document <meta> in head, <frameset>,
+fragment contexts not starting in IN_BODY — take the Python tree
+builder, which stays as that fallback and as the reference the
+differential tests compare against; the choice depends on the input
+alone. HP_FASTSCAN=0 turns off the scanner and the fused builder.
 """
 
 from __future__ import annotations
@@ -26,7 +35,11 @@ import pyarrow as pa
 from ..kernel.api import parse_document, parse_fragment
 from ..kernel.boilerplate import strip_boilerplate, _Block, _score
 from ..kernel.charref import decode_character_references
-from ..kernel.tokenizer import replace_nulls
+from ..kernel.encoding import CONF_TENTATIVE
+from ..kernel.extract import count_nodes, extract_text_with_spans
+from ..kernel.fastscan import fused_extract
+from ..kernel.tokenizer import Tokenizer, replace_nulls
+from ..kernel.treebuilder import build_document, build_fragment
 
 _WS_ONLY = frozenset(" \n\t\r\f")
 _WS_STR = " \n\t\r\f"
@@ -145,16 +158,48 @@ def parse_turn(text: str, mode: str = "fragment", context: str = "div",
         if not boilerplate:
             return fast_extract(text, mode, context)
         return _fast_extract_boilerplate(text, mode, context)
+    if not boilerplate:
+        return _parse_markup(text, mode, context)
     if mode == "document":
         res = parse_document(text)
     else:
         res = parse_fragment(text, context)
-    if boilerplate:
-        ext, spans, _, _ = strip_boilerplate(res.doc)
-    else:
-        ext, spans = res.extract_text()
+    ext, spans, _, _ = strip_boilerplate(res.doc)
     return (ext, spans, res.error_count, res.node_count,
             res.encoding or "UTF-8", res.errors)
+
+
+def _parse_markup(text: str, mode: str, context: str):
+    """parse_turn's markup extraction, as api.parse_document /
+    parse_fragment on str input then extract_text: the fused C scan and
+    build when it accepts the turn, else the Python builder over the
+    records already scanned (a tree bail) or the Python tokenizer (a
+    scan bail)."""
+    document = mode == "document"
+    ctx = None if document else context
+    errors: list = []
+    clean = replace_nulls(text, errors)
+    got = fused_extract(clean, errors, ctx, document)
+    if type(got) is tuple:
+        ext, spans, nodes = got
+        return ext, spans, len(errors), nodes, "UTF-8", errors
+    feed = got if got is not None else Tokenizer(
+        clean, ctx, errors=errors, reuse_token=True)
+    if document:
+        doc, change, _ = build_document(
+            clean, "UTF-8", CONF_TENTATIVE, errors=errors,
+            want_change_encoding=True, feed=feed)
+        if doc is None and change is not None:
+            # <meta> charset re-encode: the API's whole re-parse
+            res = parse_document(text)
+            ext, spans = res.extract_text()
+            return (ext, spans, res.error_count, res.node_count,
+                    res.encoding or "UTF-8", res.errors)
+    else:
+        doc, _ = build_fragment(clean, ctx, "UTF-8", CONF_TENTATIVE,
+                                errors=errors, feed=feed)
+    ext, spans = extract_text_with_spans(doc)
+    return ext, spans, len(errors), count_nodes(doc), "UTF-8", errors
 
 
 def _fast_extract_boilerplate(text: str, mode: str, context: str):

@@ -19,8 +19,14 @@ token-identical subset.  These tests pin that contract three ways:
 
 from __future__ import annotations
 
+import base64
+import functools
 import glob
+import importlib.util
+import json
+import os
 import random
+import tracemalloc
 
 import pytest
 
@@ -30,6 +36,8 @@ from html_parser_spark.kernel.tokenizer import (
     TOKEN_EOF, Tokenizer, replace_nulls,
 )
 from html_parser_spark.kernel.tree import dump_ascii, serialize_html
+from html_parser_spark.spark.transcripts import _HTML_TEMPLATES, _PLAIN_WORDS
+from html_parser_spark.spark.udfs import parse_turn
 
 pytestmark = pytest.mark.skipif(
     fastscan._load() is None,
@@ -84,9 +92,13 @@ def _with_fastscan_disabled(fn):
 # ---------------------------------------------------------------------
 
 def test_token_differential_fixtures():
+    # the reference fixtures when present, plus the in-repo corpus (the
+    # C-vs-Python token differential needs no reference binary)
+    texts = [(fp, _read_text(fp)) for fp in FIXTURES]
+    texts += [(label, replace_nulls(text))
+              for label, text in _in_repo_corpus()]
     accepted = 0
-    for fp in FIXTURES:
-        text = _read_text(fp)
+    for fp, text in texts:
         errs_fast: list = []
         feed = fastscan.make_feed(text, errs_fast)
         if feed is None:
@@ -103,6 +115,62 @@ def test_token_differential_fixtures():
         assert list(feed.skipped) == list(tz.skipped), fp
     # the corpus contains plenty of well-formed documents
     assert accepted >= 40, f"only {accepted} fixtures accepted"
+
+
+# ---------------------------------------------------------------------
+# in-repo corpus: every input here is generated from files in the
+# repository at fixed seeds, so the differentials below run on any host
+# ---------------------------------------------------------------------
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_SHAPES = ("gen", "gen_formatting", "gen_tables", "gen_foreign")
+
+
+def _fuzz_shapes():
+    path = os.path.join(_ROOT, "tools", "fuzz_diff.py")
+    spec = importlib.util.spec_from_file_location("_fuzz_diff_shapes", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@functools.lru_cache(maxsize=1)
+def _in_repo_corpus():
+    """(label, text) pairs: the embedded golden inputs, every filled
+    transcript template, the well-formed generator, the fuzz_diff shape
+    generators, and ~50 KB documents concatenated from those shapes."""
+    out = []
+    with open(os.path.join(_ROOT, "tests", "goldens", "goldens.json")) as f:
+        for case in json.load(f)["cases"]:
+            if case.get("input_b64"):
+                raw = base64.b64decode(case["input_b64"])
+                out.append(("golden", raw.decode("utf-8", "surrogateescape")))
+    rng = random.Random(7)
+    for tpl in _HTML_TEMPLATES:
+        out.append(("template", tpl.format(w0=rng.choice(_PLAIN_WORDS),
+                                           w1=rng.choice(_PLAIN_WORDS),
+                                           w2=rng.choice(_PLAIN_WORDS))))
+    rng = random.Random(20260817)
+    out += [("wellformed", _gen_wellformed(rng)) for _ in range(200)]
+    shapes = _fuzz_shapes()
+    for name in _SHAPES:
+        rng = random.Random(31)
+        fn = getattr(shapes, name)
+        out += [(name, fn(rng)) for _ in range(200)]
+    # big documents: four from the shapes free of foreign content (the
+    # fused builder's subset), two from every shape
+    pool = [text for _, text in out]
+    html_pool = [text for text in pool
+                 if not any(m in text.lower()
+                            for m in ("<svg", "<math", "<![cdata["))]
+    rng = random.Random(50_000)
+    for source in (html_pool,) * 4 + (pool,) * 2:
+        parts, size = [], 0
+        while size < 50_000:
+            parts.append(rng.choice(source))
+            size += len(parts[-1])
+        out.append(("big", "".join(parts)))
+    return out
 
 
 # ---------------------------------------------------------------------
@@ -744,3 +812,152 @@ def test_interleaved_positioned_errors_stay_per_feed():
     _drain(Tokenizer(d2, errors=p2))
     assert e1 == p1 and e2 == p2
     assert p1 and p2  # both documents genuinely error
+
+
+# ---------------------------------------------------------------------
+# 6. fused tree builder: udfs.parse_turn with the C scan+build vs the
+#    Python kernel (the HP_FASTSCAN=0 oracle)
+# ---------------------------------------------------------------------
+
+def _fused_vs_python(text, mode, context="div"):
+    """parse_turn with the accelerator vs without; returns the fused
+    builder's bail reason for the input (None == built in C)."""
+    document = mode == "document"
+    fastscan.fused_extract(replace_nulls(text), [],
+                           None if document else context, document)
+    reason = fastscan.bail_reason()
+    fused = parse_turn(text, mode, context)
+    python = _with_fastscan_disabled(lambda: parse_turn(text, mode, context))
+    assert fused == python, (mode, context, text[:300])
+    return reason
+
+
+# accepted (built entirely in C) per corpus label and mode, about 90%
+# of the measured document/fragment counts: golden 17/17 of 18,
+# template 23/23 of 26, wellformed 51/81 of 200 (its foreign chunks
+# make most documents bail), gen 161/152, gen_formatting 200/200,
+# gen_tables 200/200, gen_foreign 109/18 of 200, big 4/4 of 6
+_ACCEPT_FLOORS = {
+    ("golden", "document"): 15, ("golden", "fragment"): 15,
+    ("template", "document"): 20, ("template", "fragment"): 20,
+    ("wellformed", "document"): 45, ("wellformed", "fragment"): 72,
+    ("gen", "document"): 145, ("gen", "fragment"): 136,
+    ("gen_formatting", "document"): 180, ("gen_formatting", "fragment"): 180,
+    ("gen_tables", "document"): 180, ("gen_tables", "fragment"): 180,
+    ("gen_foreign", "document"): 98, ("gen_foreign", "fragment"): 16,
+    ("big", "document"): 4, ("big", "fragment"): 4,
+}
+
+
+def test_fused_differential_in_repo_corpus():
+    accepted: dict = {}
+    for label, text in _in_repo_corpus():
+        for mode in ("document", "fragment"):
+            if _fused_vs_python(text, mode) is None:
+                accepted[label, mode] = accepted.get((label, mode), 0) + 1
+    # a fused builder that bails on everything would pass the equality
+    # checks above on the Python fallback alone
+    for key, floor in _ACCEPT_FLOORS.items():
+        assert accepted.get(key, 0) >= floor, (key, accepted.get(key, 0))
+
+
+def test_fused_differential_fragment_contexts():
+    shapes = _fuzz_shapes()
+    rng = random.Random(5)
+    texts = [getattr(shapes, name)(rng) for name in _SHAPES for _ in range(25)]
+    accepted = 0
+    for context in shapes.CONTEXTS + ["", "DIV"]:
+        for text in texts:
+            reason = _fused_vs_python(text, "fragment", context)
+            accepted += reason is None
+            if context in ("table", "tr", "td", "select", "template",
+                           "head", "tbody", "caption", "thead", "th"):
+                assert reason in ("tree-context", "gate-fragment-cdata"), (
+                    context, reason)
+    assert accepted >= 1000, accepted
+
+
+@pytest.mark.parametrize("text,mode,reason", [
+    ("<p>a<svg><circle r=1/></svg>b</p>", "document", "tree-foreign"),
+    ("<div><math><mi>x</mi></math></div>", "fragment", "tree-foreign"),
+    ("<select><svg></svg></select>", "fragment", "tree-foreign"),
+    ("<!DOCTYPE html><head><meta charset=utf-8><title>t</title></head>x",
+     "document", "tree-meta"),
+    ("<html><head><meta charset=windows-1252></head><body>\u00e9</body>",
+     "document", "tree-meta"),
+    ("<html><frameset><frame></frameset></html>", "document",
+     "tree-frameset"),
+])
+def test_fused_bails_give_identical_output(text, mode, reason):
+    assert _fused_vs_python(text, mode) == reason
+
+
+def test_fused_meta_outside_head_is_built_in_c():
+    # only the IN_HEAD insert runs the re-encode handshake
+    for text, mode in (("<p><meta charset=latin1>x</p>", "document"),
+                       ("<meta charset=latin1><p>x</p>", "fragment")):
+        assert _fused_vs_python(text, mode) is None
+
+
+def test_fused_hands_scanned_records_to_python():
+    # a tree bail returns the FastFeed over the records already scanned,
+    # so the Python builder does not scan the input again
+    errors: list = []
+    got = fastscan.fused_extract("<p>x<svg></svg></p>", errors, "div")
+    assert fastscan.bail_reason() == "tree-foreign"
+    assert got is not None and not isinstance(got, tuple)
+    assert got.errors is errors and errors == []
+    assert _drain(got) == _drain(Tokenizer("<p>x<svg></svg></p>", "div"))
+
+
+def test_bail_reason_reset_every_call():
+    assert fastscan.make_feed("<p>\x00</p>", []) is None
+    assert fastscan.bail_reason() == "precheck"
+    # Python-side gates name themselves, not the previous scan's bail
+    assert fastscan.make_feed("<p>x</p>", [], "title") is None
+    assert fastscan.bail_reason() == "gate-raw-context"
+    assert fastscan.make_feed("<![CDATA[x]]>", [], "div") is None
+    assert fastscan.bail_reason() == "gate-fragment-cdata"
+    assert fastscan.make_feed("", []) is None
+    assert fastscan.bail_reason() == "empty-input"
+    assert fastscan.make_feed("<p>\x00</p>", []) is None
+    assert fastscan.make_feed("<p>x</p>", []) is not None
+    assert fastscan.bail_reason() is None
+    assert fastscan.fused_extract("<svg></svg>", [], "div") is not None
+    assert fastscan.bail_reason() == "tree-foreign"
+    assert isinstance(fastscan.fused_extract("<p>x</p>", [], "div"), tuple)
+    assert fastscan.bail_reason() is None
+    assert fastscan.fused_extract("<tr>x", [], "table") is not None
+    assert fastscan.bail_reason() == "tree-context"
+
+
+def test_fused_memory_flat_over_repeated_calls():
+    # the arena, table-text joins and error buffers live on PyMem_*
+    # allocators (traced here) and are freed on every path
+    text = ("<!DOCTYPE html><table><tr><td>a<b>x</td>y</tr></table>"
+            "<p><b><i>q</b>r</i><template>t</template>" * 20)
+    shapes = _fuzz_shapes()
+    others = [shapes.gen_formatting(random.Random(k)) for k in range(4)]
+    others.append("<p>x<svg></svg>")  # tree bail: records handed over
+
+    def calls(n):
+        for _ in range(n):
+            errors: list = []
+            assert isinstance(
+                fastscan.fused_extract(text, errors, None, True), tuple)
+            for other in others:
+                fastscan.fused_extract(other, [], "div")
+
+    calls(50)
+    tracemalloc.start()
+    try:
+        calls(5)
+        before = tracemalloc.get_traced_memory()[0]
+        tracemalloc.reset_peak()
+        calls(1000)
+        after, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert after - before < 64 * 1024, after - before
+    # one arena block alone is tens of KB: the arena is traced
+    assert peak - before > 16 * 1024, peak - before

@@ -283,6 +283,32 @@ def test_embedding_near_dup_finds_planted(spark):
     assert math.isfinite(len(lsh_pairs))
 
 
+def test_winnowing_short_documents(spark):
+    # fewer k-gram hashes than the window width: no window exists, so a
+    # short document keeps its one whole-text fingerprint (k=8, w=4
+    # means every text under 11 characters) instead of indexing
+    # element 0 of the hash array
+    import hashlib
+
+    from html_parser_spark.spark.ops import winnowing_fingerprints
+
+    texts = ["abcdef", "abcdefg", "abcdefgh", "abcdefghi", "abcdefghij",
+             "abcdefghijk", "the quick brown fox jumps over the lazy dog"]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "doc_id long, text string")
+    rows = {r.doc_id: r for r in winnowing_fingerprints(df).collect()}
+    for i, text in enumerate(texts[:5]):
+        assert rows[i].n_fingerprints == 1
+        assert rows[i].min_fingerprint == hashlib.md5(
+            text.encode()).hexdigest()
+    grams = [hashlib.md5(texts[6][i:i + 8].encode()).hexdigest()
+             for i in range(len(texts[6]) - 7)]
+    fps = {min(grams[j:j + 4]) for j in range(len(grams) - 3)}
+    assert rows[6].n_fingerprints == len(fps)
+    assert rows[6].min_fingerprint == min(fps)
+    assert rows[5].n_fingerprints == 1
+
+
 def test_simhash_similar_docs_close(spark):
     from html_parser_spark.spark.ops import simhash
 

@@ -4,6 +4,12 @@ and the Python kernel; compare ASCII dumps byte-for-byte.
 
 Usage: python3 tools/fuzz_diff.py [N] [--seed S] [--fragment]
 Writes failing inputs to /tmp/fuzz_fail_*.html for triage.
+
+--fused compares the kernel with itself instead, needing no reference:
+udfs.parse_turn with the C fast-scan and fused tree builder against the
+pure-Python kernel, every case in document mode and in a fragment
+context drawn from CONTEXTS (repro files: fuzz_fused_*.html in the
+temp directory).
 """
 
 from __future__ import annotations
@@ -374,6 +380,69 @@ def interleave_campaign(n: int, seed: int, gen_fn) -> int:
     return 1 if fails else 0
 
 
+def fused_campaign(n: int, seed: int, gen_fn) -> int:
+    """Python-vs-fused differential (--fused): the 6-tuple
+    udfs.parse_turn returns with the accelerator on must equal the one
+    with it off (the HP_FASTSCAN=0 kernel), in document mode and in a
+    random CONTEXTS fragment per case. Prints how many parses the fused
+    builder took whole and the bail reasons of the rest."""
+    import collections
+    import tempfile
+
+    from html_parser_spark.kernel import fastscan
+    from html_parser_spark.kernel.tokenizer import replace_nulls
+    from html_parser_spark.spark.udfs import parse_turn
+
+    if fastscan._load() is None:
+        raise SystemExit("fast-scan extension unavailable (no C compiler?)")
+
+    def python_kernel(text, mode, context):
+        saved = fastscan._mod
+        fastscan._mod = None
+        try:
+            return parse_turn(text, mode, context)
+        finally:
+            fastscan._mod = saved
+
+    rng = random.Random(seed)
+    reasons: collections.Counter = collections.Counter()
+    fails = parses = 0
+    for i in range(n):
+        text = gen_fn(rng)
+        if isinstance(text, bytes):
+            text = text.decode("utf-8", "surrogateescape")
+        for context in (None, rng.choice(CONTEXTS)):
+            mode = "document" if context is None else "fragment"
+            fastscan.fused_extract(replace_nulls(text), [], context,
+                                   context is None)
+            reasons[fastscan.bail_reason() or "accepted"] += 1
+            parses += 1
+            got = parse_turn(text, mode, context or "div")
+            want = python_kernel(text, mode, context or "div")
+            if got == want:
+                continue
+            fails += 1
+            fn = os.path.join(tempfile.gettempdir(),
+                              f"fuzz_fused_{seed}_{i}_{mode}"
+                              f"{'_' + context if context else ''}.html")
+            with open(fn, "wb") as f:
+                f.write(text.encode("utf-8", "surrogateescape"))
+            print(f"MISMATCH case {i} {mode} ctx={context} -> {fn}")
+            for name, a, b in zip(("text", "spans", "errors", "nodes",
+                                   "encoding", "error_texts"), got, want):
+                if a != b:
+                    print(f"  {name}:\n    fused : {a!r:.300}\n"
+                          f"    python: {b!r:.300}")
+            if fails >= 10:
+                break
+        if fails >= 10:
+            break
+    accepted = reasons.pop("accepted", 0)
+    print(f"{n} cases ({parses} parses), {fails} mismatches (seed={seed}, "
+          f"fused); built in C {accepted}; bails {dict(reasons.most_common())}")
+    return 1 if fails else 0
+
+
 def main():
     n = 2000
     seed = 1
@@ -386,6 +455,9 @@ def main():
         raise SystemExit("--fragment and --tokens are mutually "
                          "exclusive: build_tree_from_tokens is a "
                          "document-only API")
+    if "--fused" in sys.argv and (fragment or tokens_mode):
+        raise SystemExit("--fused runs document mode and the CONTEXTS "
+                         "fragments itself; drop --fragment/--tokens")
     if tokens_mode:
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from ref_harness import build_tokens_harness
@@ -408,6 +480,8 @@ def main():
         seed = int(sys.argv[sys.argv.index("--seed") + 1])
     if "--interleave" in sys.argv:
         return interleave_campaign(n, seed, gen_fn)
+    if "--fused" in sys.argv:
+        return fused_campaign(n, seed, gen_fn)
     rng = random.Random(seed)
     fails = 0
     for i in range(n):
