@@ -16,28 +16,36 @@
  * EOF recoveries), and <plaintext> — with positioned "line=N col=M"
  * error strings built by a _line_col mirror that reproduces the
  * reference's stale positions across raw-scan skipped ranges.  What
- * still bails is the genuinely context-coupled rest: tree-builder
- * FEEDBACK (raw/CDATA entry after foreign content, fragment contexts
- * whose builder could flip allow_cdata), preprocessing (NULs,
- * surrogate escapes, the meta re-encode handshake), and charref
- * attempts the decode delegation cannot guarantee.  On a bail the
- * caller falls back to the Python tokenizer for the WHOLE document,
- * so parity holds by construction; the differential tests in
- * tests/test_fastscan.py verify token-by-token and error-by-error.
+ * still bails is the genuinely context-coupled rest: preprocessing
+ * (NULs, surrogate escapes), attribute names past the 256-character
+ * name buffer, charref attempts with no decode delegate, and — for
+ * make_feed, which has no builder to ask
+ * — a CDATA opener after <svg>/<math> (tree-builder FEEDBACK:
+ * allow_cdata) and any CDATA opener in a fragment (a Python-side
+ * gate).  On a bail the caller falls back to the Python tokenizer for
+ * the WHOLE document, so parity holds by construction; the
+ * differential tests in tests/test_fastscan.py verify token-by-token
+ * and error-by-error.
  *
  * Fused tree builder (fused_build): for udfs.parse_turn's markup
  * extraction the same records also drive a C port of the Python tree
  * builder (kernel/treebuilder.py) on a per-call PyMem arena.  It covers
- * every HTML-namespace insertion mode the Python builder has — initial,
- * before-html, head, head-noscript, body, text, table, table text,
- * caption, table body, row, cell, select, select-in-table, template,
- * after-body, after-after-body — with the adoption agency algorithm
- * (Noah's Ark clause included), foster parenting and reconstruction of
- * active formatting elements, and returns (extracted text, spans, node
- * count) with the error texts in the Python order; no Python Node is
- * created.  It bails, handing the records to the Python builder as a
- * FastFeed (one scan per input), on:
- *   - an <svg> or <math> start tag (foreign content), "tree-foreign";
+ * every insertion mode the Python builder has — initial, before-html,
+ * head, head-noscript, body, text, table, table text, caption, table
+ * body, row, cell, select, select-in-table, template, after-body,
+ * after-after-body — and foreign content (SVG/MathML namespaces,
+ * breakout, integration points, case-adjusted SVG element names),
+ * with the adoption agency algorithm (Noah's Ark clause included),
+ * foster parenting and reconstruction of active formatting elements,
+ * and returns (extracted text, spans, node count) with the error texts
+ * in the Python order; no Python Node is created.  Scan and build
+ * interleave at one point only: the scanner stops at a "<![CDATA["
+ * opener, the builder takes every token before it and answers
+ * allow_cdata (stack top not HTML, as TreeBuilder._run), and the
+ * scanner emits the CDATA section or the bogus comment and resumes —
+ * one scan per input.  It bails, handing the records to the Python
+ * builder as a FastFeed (the rest of the input scanned as make_feed
+ * would), on:
  *   - a document-mode IN_HEAD <meta> (the §13.2.3.5 re-encode
  *     handshake), "tree-meta";
  *   - <frameset>, "tree-frameset";
@@ -214,10 +222,11 @@ typedef struct {
     Py_ssize_t n, i;
     FastToken *scratch;
     int state;             /* builder reads tz.state */
-    PyObject *raw_tag;     /* builder may read/write (svg-title path
-                              can't trigger in the subset, but keep the
-                              attribute for interface parity) */
-    char allow_cdata;      /* builder writes this every token */
+    PyObject *raw_tag;     /* Tokenizer interface parity; the builder
+                              never writes it */
+    char allow_cdata;      /* interface parity: the builder writes it
+                              to a live Tokenizer only, and the scan
+                              bailed where it could matter */
     PyObject *errors;      /* shared list; tokenizer-side errors ride
                               the records and append at pull time */
     PyObject *skipped;     /* raw-scan ranges (complete up front) */
@@ -377,9 +386,13 @@ typedef struct {
     PyObject *pending_errs; /* owned list | NULL: decode errors for the
                                token currently being assembled; emit()
                                steals it into the TokRec */
-    int seen_foreign;       /* sticky: a <svg>/<math> start tag was
-                               emitted.  From then on any raw-state
-                               trigger tag bails (see done: below) */
+    Py_ssize_t pos;         /* where scan_all resumes */
+    int pause_cdata;        /* fused mode: stop at a "<![CDATA[" opener
+                               (scan_all returns 2) so the builder can
+                               answer allow_cdata; scan_cdata resumes */
+    int seen_foreign;       /* a <svg>/<math> start tag was emitted:
+                               without a builder (make_feed) a CDATA
+                               opener after it bails */
     /* positioned-error support (tokenizer._error/_line_col mirror):
        raw-scan char ranges consumed without advance() — the
        reference's line/col counters never see them, so reported
@@ -1283,10 +1296,8 @@ parse_start_tag(Scan *sc, Py_ssize_t *io)
 done: ;
     /* PLAINTEXT is a tokenizer-LEVEL switch (_enter_raw_for, no
        builder feedback): the rest of the input is ONE character token
-       — no charrefs, no errors, no tags — and the only builder write
-       to tz.state (the SVG-<title> undo) needs a later title START
-       token, which cannot exist after plaintext.  state 6 == the
-       Python machine's PLAINTEXT. */
+       — no charrefs, no errors, no tags.  state 6 == the Python
+       machine's PLAINTEXT. */
     if (name_equals(name, "plaintext")) {
         if (emit(sc, T_START, name, NULL, attrs, self_closing, 6) < 0)
             return -1;
@@ -1298,29 +1309,15 @@ done: ;
         *io = sc->n;
         return 0;
     }
-    /* Foreign content (<svg>/<math>) is builder-side EXCEPT for two
-       feedback channels, both gated on specific later input: the
-       builder's SVG-<title> tokenizer undo (foreign.py) and the
-       foreign-gated CDATA flag (allow_cdata).  CDATA needs "<![",
-       which always bails via the bogus-comment path; the undo (and
-       every other raw-entry ambiguity — e.g. <style> inside svg vs
-       inside an HTML integration point, breakout <font color>, a
-       <title> after </svg>) needs a raw-state trigger START tag at
-       some tag position after the first foreign tag.  So: accept the
-       foreign tag itself as a plain DATA-state token and set a STICKY
-       flag; from then on any raw-trigger start tag bails the whole
-       document.  Conservative (a plain-HTML <title> after </svg>
-       also bails) but context-free and provably token-identical:
-       before the flag nothing changed, after the flag no raw state is
-       ever entered C-side, matching every builder-feedback scenario
-       by never reaching one. */
+    /* Foreign content (<svg>/<math>) needs nothing from the scanner
+       but the CDATA answer (allow_cdata, see scan_all).  The raw state
+       comes from the tag name alone, as in tokenizer._enter_raw_for,
+       and every raw-state name is a foreign.BREAKOUT_TAGS name, so the
+       builder always takes such a tag in HTML mode and never undoes
+       the switch (tests/test_fastscan.py pins the subset). */
     if (name_equals(name, "svg") || name_equals(name, "math"))
         sc->seen_foreign = 1;
     int rstate = raw_state_for(name);
-    if (rstate != S_DATA && sc->seen_foreign) {
-        Py_DECREF(name); Py_XDECREF(attrs);
-        BAIL(sc, "raw-tag-after-foreign");
-    }
     if (emit(sc, T_START, name, NULL, attrs, self_closing,
              (unsigned char)rstate) < 0)
         return -1;
@@ -1444,15 +1441,65 @@ done: ;
 }
 
 /* --- whole-document scan ------------------------------------------- */
-/* returns 0 ok, 1 bail, -1 python error                               */
 
+/* bogus comment (tokenizer next(), src/tokenizer.c:1581-1593) at the
+   "<!" at *io: error at the '<', comment data = chars after "<!" up to
+   (not incl.) the next '>' or EOF */
 static int
-scan_all(Scan *sc)
+scan_bogus_comment(Scan *sc, Py_ssize_t *io)
 {
-    Py_ssize_t i = 0, n = sc->n;
+    Py_ssize_t i = *io, n = sc->n;
+    if (scan_error(sc, "bogus markup declaration", i) < 0)
+        return -1;
+    Py_ssize_t gt = find_char(sc, '>', i + 2);
+    if (gt == -2) return -1;
+    PyObject *d = substr(sc, i + 2, gt < 0 ? n : gt);
+    if (!d) return -1;
+    if (emit(sc, T_COMMENT, NULL, d, NULL, 0, S_DATA) < 0)
+        return -1;
+    *io = (gt < 0) ? n : gt + 1;
+    return 0;
+}
 
-    /* global pre-checks: NUL, surrogates (surrogateescape byte
-       fusion).  One pass, then the main scan never needs to re-check.
+/* The "<![CDATA[" opener at sc->pos, once the builder has answered
+   allow_cdata (tokenizer next()'s CDATA branch): the section as ONE
+   character token, or a bogus comment when CDATA is not allowed. */
+static int
+scan_cdata(Scan *sc, int allow_cdata)
+{
+    Py_ssize_t i = sc->pos, n = sc->n;
+    if (!allow_cdata) {
+        if (scan_bogus_comment(sc, &i) < 0) return -1;
+        sc->pos = i;
+        return 0;
+    }
+    Py_ssize_t start = i + 9, end = -1;
+    for (Py_ssize_t k = start; k + 2 < n; k++) {
+        if (RD(sc, k) == ']' && RD(sc, k + 1) == ']'
+                && RD(sc, k + 2) == '>') { end = k; break; }
+    }
+    PyObject *d = substr(sc, start, end < 0 ? n : end);
+    if (!d) return -1;
+    if (end < 0) {
+        /* unclosed: advance() stops at len-2, then a raw jump to the
+           end (src/tokenizer.c:1578) — later positions are stale */
+        Py_ssize_t a = start > n - 2 ? start : n - 2;
+        if (a < n && push_skip(sc, a, n) < 0) {
+            Py_DECREF(d);
+            return -1;
+        }
+    }
+    if (emit(sc, T_CHAR, NULL, d, NULL, 0, S_DATA) < 0) return -1;
+    sc->pos = end < 0 ? n : end + 3;
+    return 0;
+}
+
+/* global pre-checks, once per input: NUL, surrogates; 0 ok, 1 bail */
+static int
+scan_precheck(Scan *sc)
+{
+    /* surrogates come from surrogateescape byte fusion.  One pass,
+       then the main scan never needs to re-check.
        NOT global:
        - '&': literal ampersands are accepted per-region and charref
          attempts are delegated to the kernel's decoder (region_text);
@@ -1462,12 +1509,21 @@ scan_all(Scan *sc)
          here; the CR paths that ERROR in the Python machine
          (\r before '>' in end tags, after '/') already end in bails
          because they break the immediate-'>' / self-closing shape. */
-    for (Py_ssize_t k = 0; k < n; k++) {
+    for (Py_ssize_t k = 0; k < sc->n; k++) {
         Py_UCS4 c = RD(sc, k);
         if (c == 0 || (c >= 0xD800 && c <= 0xDFFF))
             BAIL(sc, "precheck");
     }
+    return 0;
+}
 
+/* Scan from sc->pos.  Returns 0 at the end of the input, 1 bail, 2
+   paused at a CDATA opener (pause_cdata; sc->pos is the '<'), -1
+   python error. */
+static int
+scan_all(Scan *sc)
+{
+    Py_ssize_t i = sc->pos, n = sc->n;
     while (i < n) {
         Py_UCS4 c = RD(sc, i);
         if (c != '<') {
@@ -1717,31 +1773,26 @@ scan_all(Scan *sc)
                 continue;
             }
             /* "<!" not comment/doctype: the CDATA branch is gated on
-               allow_cdata (builder feedback), which can only be true
-               after foreign content — seen_foreign covers the
-               document path; fragment contexts are gated in the
-               Python wrapper (make_feed bails on "<![CDATA[" when a
-               context is given).  The EXACT-case "[CDATA[" probe is
-               what the Python machine tests (tokenizer next()). */
-            if (sc->seen_foreign && i + 8 < n
+               allow_cdata, builder feedback (stack top not HTML).
+               The fused builder answers it: pause here, scan_cdata
+               resumes.  Without a builder (make_feed) it can only be
+               true after a <svg>/<math> start tag — the fragment
+               context is always an HTML element — so only then bail.
+               The EXACT-case "[CDATA[" probe is what the Python
+               machine tests (tokenizer next()). */
+            if (i + 8 < n
                 && RD(sc, i + 2) == '[' && RD(sc, i + 3) == 'C'
                 && RD(sc, i + 4) == 'D' && RD(sc, i + 5) == 'A'
                 && RD(sc, i + 6) == 'T' && RD(sc, i + 7) == 'A'
-                && RD(sc, i + 8) == '[')
-                BAIL(sc, "cdata-after-foreign");
-            /* bogus comment (tokenizer next(), src/tokenizer.c:
-               1581-1593): error at the '<', comment data = chars
-               after "<!" up to (not incl.) the next '>' or EOF */
-            if (scan_error(sc, "bogus markup declaration", i) < 0)
-                return -1;
-            Py_ssize_t b = i + 2;
-            Py_ssize_t gt = find_char(sc, '>', b);
-            if (gt == -2) return -1;
-            PyObject *d = substr(sc, b, gt < 0 ? n : gt);
-            if (!d) return -1;
-            if (emit(sc, T_COMMENT, NULL, d, NULL, 0, S_DATA) < 0)
-                return -1;
-            i = (gt < 0) ? n : gt + 1;
+                && RD(sc, i + 8) == '[') {
+                if (sc->pause_cdata) {
+                    sc->pos = i;
+                    return 2;
+                }
+                if (sc->seen_foreign)
+                    BAIL(sc, "cdata-after-foreign");
+            }
+            if (scan_bogus_comment(sc, &i) < 0) return -1;
             continue;
         }
         if (is_alpha(c1)) {
@@ -1757,6 +1808,7 @@ scan_all(Scan *sc)
             i++;
         }
     }
+    sc->pos = n;
     return 0;
 }
 
@@ -1767,10 +1819,11 @@ scan_all(Scan *sc)
 
 static const char *last_bail = NULL;
 
-/* Scan `text` into sc->rb.  Returns 0 accepted, 1 scanner bail
-   (sc->bail set, records freed), -1 python error (records freed). */
+/* Set up a scan of `text` and run the global pre-checks.  Returns 0,
+   1 scanner bail (sc->bail set), -1 python error; scan_end releases
+   what it holds in every case. */
 static int
-scan_text(Scan *sc, PyObject *text, PyObject *decode_fn)
+scan_begin(Scan *sc, PyObject *text, PyObject *decode_fn)
 {
     memset(sc, 0, sizeof(*sc));
     sc->text = text;
@@ -1778,18 +1831,36 @@ scan_text(Scan *sc, PyObject *text, PyObject *decode_fn)
     sc->data = PyUnicode_DATA(text);
     sc->n = PyUnicode_GET_LENGTH(text);
     sc->decode_fn = (decode_fn && decode_fn != Py_None) ? decode_fn : NULL;
-    sc->interns = PyDict_New();
-    if (!sc->interns) return -1;
     sc->lc_line = 1;
     sc->lc_col = 1;
-    int rc = scan_all(sc);
-    Py_DECREF(sc->interns);
+    sc->interns = PyDict_New();
+    if (!sc->interns) return -1;
+    return scan_precheck(sc);
+}
+
+/* Release a scan; `keep` leaves the records and skip ranges for
+   feed_from_scan, which takes them over. */
+static void
+scan_end(Scan *sc, int keep)
+{
+    Py_CLEAR(sc->interns);
     Py_CLEAR(sc->pending_errs);  /* set-then-bail leaves a remnant */
-    if (rc != 0) {
+    if (!keep) {
         recbuf_clear(&sc->rb);
         PyMem_Free(sc->skips);
         sc->skips = NULL;
     }
+}
+
+/* Scan all of `text` into sc->rb, with no builder to answer
+   allow_cdata.  Returns 0 accepted, 1 scanner bail (sc->bail set,
+   records freed), -1 python error (records freed). */
+static int
+scan_text(Scan *sc, PyObject *text, PyObject *decode_fn)
+{
+    int rc = scan_begin(sc, text, decode_fn);
+    if (rc == 0) rc = scan_all(sc);
+    scan_end(sc, rc == 0);
     return rc;
 }
 
@@ -1892,22 +1963,25 @@ make_feed(PyObject *Py_UNUSED(mod), PyObject *args)
 #define FB_TMODE_MAX 64       /* treebuilder.TEMPLATE_MODE_MAX */
 
 /* every tag name the builder tests; anything else is TAG_OTHER and
-   compares by string */
+   compares by string.  A node's tag is always tag_of(its name), also
+   in foreign content, so comparing tags IS comparing names. */
 #define TAG_LIST(X) \
     X(a) X(address) X(applet) X(area) X(article) X(aside) X(b) X(base) \
     X(basefont) X(bgsound) X(big) X(blockquote) X(body) X(br) X(button) \
     X(caption) X(center) X(code) X(col) X(colgroup) X(content) X(dd) \
-    X(details) X(dir) X(div) X(dl) X(dt) X(em) X(embed) X(fieldset) \
-    X(figcaption) X(figure) X(font) X(footer) X(form) X(frame) \
-    X(frameset) X(h1) X(h2) X(h3) X(h4) X(h5) X(h6) X(head) X(header) \
-    X(hgroup) X(hr) X(html) X(i) X(iframe) X(img) X(input) X(li) X(link) \
-    X(listing) X(main) X(marquee) X(math) X(menu) X(meta) X(nav) X(nobr) \
-    X(noembed) X(noframes) X(noscript) X(object) X(ol) X(optgroup) \
-    X(option) X(p) X(param) X(plaintext) X(pre) X(rb) X(rp) X(rt) X(rtc) \
-    X(s) X(script) X(section) X(select) X(small) X(source) X(strike) \
-    X(strong) X(style) X(summary) X(svg) X(table) X(tbody) X(td) \
-    X(template) X(textarea) X(tfoot) X(th) X(thead) X(title) X(tr) \
-    X(track) X(tt) X(u) X(ul) X(wbr) X(xmp)
+    X(desc) X(details) X(dir) X(div) X(dl) X(dt) X(em) X(embed) \
+    X(fieldset) X(figcaption) X(figure) X(font) X(footer) X(form) \
+    X(frame) X(frameset) X(h1) X(h2) X(h3) X(h4) X(h5) X(h6) X(head) \
+    X(header) X(hgroup) X(hr) X(html) X(i) X(iframe) X(img) X(input) \
+    X(li) X(link) X(listing) X(main) X(malignmark) X(marquee) X(math) \
+    X(menu) X(meta) X(mglyph) X(mi) X(mn) X(mo) X(ms) X(mtext) X(nav) \
+    X(nobr) X(noembed) X(noframes) X(noscript) X(object) X(ol) \
+    X(optgroup) X(option) X(p) X(param) X(plaintext) X(pre) X(rb) X(rp) \
+    X(rt) X(rtc) X(s) X(script) X(section) X(select) X(small) X(source) \
+    X(span) X(strike) X(strong) X(style) X(sub) X(summary) X(sup) X(svg) \
+    X(table) X(tbody) X(td) X(template) X(textarea) X(tfoot) X(th) \
+    X(thead) X(title) X(tr) X(track) X(tt) X(u) X(ul) X(var) X(wbr) \
+    X(xmp)
 
 enum {
     TAG_OTHER = 0,
@@ -1945,6 +2019,7 @@ static const char *TAG_STR[TAG_COUNT] = {
 #define F_BLOCK_LIKE   (1u << 17)  /* _BLOCK_LIKE */
 #define F_HEADING      (1u << 18)  /* _HEADINGS */
 #define F_SPECIAL      (1u << 19)  /* foreign.HTML_SPECIAL */
+#define F_BREAKOUT     (1u << 20)  /* foreign.BREAKOUT_TAGS */
 
 static const struct { unsigned flag; const char *names; } TAG_SETS[] = {
     {F_FMT, "a b big code em font i nobr s small strike strong tt u"},
@@ -1984,11 +2059,52 @@ static const struct { unsigned flag; const char *names; } TAG_SETS[] = {
                 "p param plaintext pre script section select source style "
                 "summary table tbody td template textarea tfoot th thead "
                 "title tr track ul wbr xmp"},
+    {F_BREAKOUT, "a address applet area article aside b base basefont "
+                 "bgsound big blockquote body br button caption center "
+                 "code col colgroup dd details dir div dl dt em embed "
+                 "fieldset figcaption figure footer form frame frameset "
+                 "h1 h2 h3 h4 h5 h6 head header hgroup hr html i iframe "
+                 "img input li link listing main marquee menu meta nav "
+                 "nobr noembed noframes noscript object ol p param "
+                 "plaintext pre s script section select small source span "
+                 "strike strong style sub summary sup table tbody td "
+                 "template textarea tfoot th thead title tr track tt u ul "
+                 "var wbr xmp"},
 };
 
 static unsigned TAG_FLAGS[TAG_COUNT];
 static PyObject *TAG_NAME[TAG_COUNT];   /* str per tag id */
 static PyObject *TAG_IDS;               /* dict: str -> int tag id */
+
+/* foreign.SVG_ELEMENT_MAP: lowered name -> SVG element name.  Only the
+   element names are adjusted: span paths carry them, while no foreign
+   attribute reaches the extraction, and the one the builder reads
+   (annotation-xml's "encoding", MathML) no attribute map renames. */
+static const char *SVG_NAME_PAIRS[] = {
+    "altglyph", "altGlyph", "altglyphdef", "altGlyphDef",
+    "altglyphitem", "altGlyphItem", "animatecolor", "animateColor",
+    "animatemotion", "animateMotion", "animatetransform", "animateTransform",
+    "clippath", "clipPath", "feblend", "feBlend",
+    "fecolormatrix", "feColorMatrix",
+    "fecomponenttransfer", "feComponentTransfer", "fecomposite", "feComposite",
+    "feconvolvematrix", "feConvolveMatrix",
+    "fediffuselighting", "feDiffuseLighting",
+    "fedisplacementmap", "feDisplacementMap",
+    "fedistantlight", "feDistantLight", "fedropshadow", "feDropShadow",
+    "feflood", "feFlood", "fefunca", "feFuncA", "fefuncb", "feFuncB",
+    "fefuncg", "feFuncG", "fefuncr", "feFuncR",
+    "fegaussianblur", "feGaussianBlur", "feimage", "feImage",
+    "femerge", "feMerge", "femergenode", "feMergeNode",
+    "femorphology", "feMorphology", "feoffset", "feOffset",
+    "fepointlight", "fePointLight",
+    "fespecularlighting", "feSpecularLighting", "fespotlight", "feSpotLight",
+    "fetile", "feTile", "feturbulence", "feTurbulence",
+    "foreignobject", "foreignObject", "glyphref", "glyphRef",
+    "lineargradient", "linearGradient", "radialgradient", "radialGradient",
+    "textpath", "textPath", NULL,
+};
+static PyObject *SVG_NAMES;             /* dict built from SVG_NAME_PAIRS */
+static PyObject *NAME_FOREIGN_OBJECT, *NAME_ANNOTATION_XML, *KEY_ENCODING;
 
 #define HAS(tag, f) ((TAG_FLAGS[(tag)] & (f)) != 0)
 
@@ -2041,6 +2157,13 @@ enum { A_NONE = -1, A_BREAK = 0, A_CHECK, A_REPROCESS, A_STOP };
 enum { DM_NO_QUIRKS, DM_LIMITED_QUIRKS, DM_QUIRKS };
 
 enum { N_DOCUMENT, N_DOCTYPE, N_ELEMENT, N_TEXT, N_COMMENT };
+enum { NS_HTML, NS_SVG, NS_MATHML };   /* tree.NS_* */
+
+/* what the builder asks of a foreign element (foreign.py), fixed when
+   it is made: its name and attributes never change afterwards */
+#define FK_TEXT_IP  1   /* is_mathml_text_integration_point (MathML) */
+#define FK_HTML_IP  2   /* is_html_integration_point */
+#define FK_SPECIAL  4   /* is_special_element_ns == is_scoping_element_ns */
 
 typedef struct FNode {
     struct FNode *parent, *first, *last, *prev, *next;
@@ -2050,6 +2173,8 @@ typedef struct FNode {
     short tag;
     unsigned char type;
     unsigned char in_stack;   /* Node.in_stack */
+    unsigned char ns;         /* Node.ns */
+    unsigned char fk;         /* FK_* of a foreign element */
 } FNode;
 
 #define ARENA_BLOCK 512
@@ -2071,10 +2196,14 @@ typedef struct {
     TokRec *rec;
 } FTok;
 
-typedef struct {
+typedef struct TB {
     jmp_buf fail;            /* out of memory / python error / bail */
     const char *bail;        /* tree-* reason on a bail longjmp */
-    int fragment;
+    Scan sc;                 /* the scan feeding this build */
+    int scan_rc;             /* 1 after a scanner bail */
+    int (*dispatch)(struct TB *, FTok *);
+    Py_ssize_t fed;          /* records dispatched so far */
+    int stopped;             /* the drive loop stopped (A_STOP) */
     ArenaBlock *arena;
     PyObject **owned;        /* joined table-text strings */
     Py_ssize_t n_owned, cap_owned;
@@ -2207,7 +2336,10 @@ reparent_children(FNode *src, FNode *dst)
 static FNode *
 clone_shallow(TB *tb, FNode *n)
 {
-    return new_element(tb, n->tag, n->name, n->attrs);
+    FNode *c = new_element(tb, n->tag, n->name, n->attrs);
+    c->ns = n->ns;
+    c->fk = n->fk;
+    return c;
 }
 
 /* -- names -- */
@@ -2269,6 +2401,116 @@ attrs_equal(TB *tb, PyObject *a, PyObject *b)
     int eq = PyObject_RichCompareBool(a, b, Py_EQ);
     if (eq < 0) tb_fail(tb, NULL);
     return eq;
+}
+
+/* ascii_lower(a) == ascii_lower(b) */
+static int
+ascii_ieq(PyObject *a, PyObject *b)
+{
+    if (a == b) return 1;
+    Py_ssize_t n = PyUnicode_GET_LENGTH(a);
+    if (n != PyUnicode_GET_LENGTH(b)) return 0;
+    for (Py_ssize_t i = 0; i < n; i++) {
+        Py_UCS4 x = PyUnicode_READ_CHAR(a, i), y = PyUnicode_READ_CHAR(b, i);
+        if (x >= 'A' && x <= 'Z') x += 32;
+        if (y >= 'A' && y <= 'Z') y += 32;
+        if (x != y) return 0;
+    }
+    return 1;
+}
+
+/* -- foreign content (foreign.py) -- */
+
+/* the attribute test of is_html_integration_point for annotation-xml */
+static int
+annotation_is_html(PyObject *attrs)
+{
+    Py_ssize_t m = attrs ? PyList_GET_SIZE(attrs) : 0;
+    for (Py_ssize_t k = 0; k < m; k++) {
+        PyObject *pair = PyList_GET_ITEM(attrs, k);
+        PyObject *v = PyTuple_GET_ITEM(pair, 1);
+        if (PyUnicode_Compare(PyTuple_GET_ITEM(pair, 0), KEY_ENCODING) == 0
+                && PyUnicode_Check(v)
+                && (ascii_lower_eq(v, "text/html")
+                    || ascii_lower_eq(v, "application/xhtml+xml")))
+            return 1;
+    }
+    return 0;
+}
+
+static int
+name_eq(PyObject *a, PyObject *b)
+{
+    return a == b || PyUnicode_Compare(a, b) == 0;
+}
+
+/* FK_* of foreign element n */
+static unsigned char
+foreign_kind(FNode *n)
+{
+    if (n->ns == NS_MATHML) {
+        switch (n->tag) {
+        case TAG_mi: case TAG_mo: case TAG_mn: case TAG_ms: case TAG_mtext:
+            return FK_TEXT_IP | FK_SPECIAL;
+        case TAG_OTHER:
+            if (name_eq(n->name, NAME_ANNOTATION_XML))
+                return FK_SPECIAL
+                    | (annotation_is_html(n->attrs) ? FK_HTML_IP : 0);
+            return 0;
+        default:
+            return 0;
+        }
+    }
+    if (n->tag == TAG_desc || n->tag == TAG_title
+            || (n->tag == TAG_OTHER && name_eq(n->name, NAME_FOREIGN_OBJECT)))
+        return FK_HTML_IP | FK_SPECIAL;
+    return 0;
+}
+
+/* the element for start tag t in namespace ns: SVG names adjusted
+   (svg_adjust_element_name), attributes as the token has them (see
+   SVG_NAME_PAIRS) */
+static FNode *
+new_foreign(TB *tb, FTok *t, int ns)
+{
+    PyObject *name = t->name;
+    short tag = t->tag;
+    if (ns == NS_SVG) {
+        PyObject *adj = PyDict_GetItemWithError(SVG_NAMES, name);
+        if (adj) {
+            name = adj;
+            tag = tag_of(adj);
+        } else if (PyErr_Occurred()) {
+            tb_fail(tb, NULL);
+        }
+    }
+    FNode *n = new_element(tb, tag, name, t->attrs);
+    n->ns = (unsigned char)ns;
+    n->fk = foreign_kind(n);
+    return n;
+}
+
+/* is_special_element_ns */
+static int
+is_special(FNode *n)
+{
+    return n->ns == NS_HTML ? HAS(n->tag, F_SPECIAL)
+                            : (n->fk & FK_SPECIAL) != 0;
+}
+
+/* font_has_breakout_attr */
+static int
+font_breakout(PyObject *attrs)
+{
+    Py_ssize_t m = attrs ? PyList_GET_SIZE(attrs) : 0;
+    for (Py_ssize_t k = 0; k < m; k++) {
+        PyObject *a = PyTuple_GET_ITEM(PyList_GET_ITEM(attrs, k), 0);
+        if (PyUnicode_CompareWithASCIIString(a, "color") == 0
+                || PyUnicode_CompareWithASCIIString(a, "face") == 0
+                || PyUnicode_CompareWithASCIIString(a, "size") == 0)
+            return 1;
+    }
+    return 0;
 }
 
 /* -- stack helpers -- */
@@ -2373,13 +2615,22 @@ in_template_context(TB *tb)
 }
 
 /* _in_scope / _in_list_item_scope / _in_button_scope /
-   _in_table_scope: every open element is HTML-namespace here */
+   _in_table_scope: the name matches on an HTML element only; a foreign
+   element in its namespace's scoping set stops the walk; the `scoping`
+   set is tested by name, except that _in_scope tests it (as
+   HTML_SCOPING) on HTML elements only */
 static int
 in_scope_flag(TB *tb, short tag, PyObject *name, unsigned scoping)
 {
     for (int i = tb->nst - 1; i >= 0; i--) {
         FNode *n = tb->st[i];
-        if (name_is(n, tag, name)) return 1;
+        if (n->ns == NS_HTML) {
+            if (name_is(n, tag, name)) return 1;
+        } else if (n->fk & FK_SPECIAL) {
+            return 0;
+        } else if (scoping == F_SCOPING) {
+            continue;
+        }
         if (HAS(n->tag, scoping)) return 0;
     }
     return 0;
@@ -2714,7 +2965,7 @@ adoption_agency(TB *tb, short tag, PyObject *name)
 
         FNode *fb = NULL;
         for (int i = fe_si + 1; i < tb->nst; i++)
-            if (HAS(tb->st[i]->tag, F_SPECIAL)) { fb = tb->st[i]; break; }
+            if (is_special(tb->st[i])) { fb = tb->st[i]; break; }
         if (!fb) {
             while (tb->nst)
                 if (tb_pop(tb) == fe) break;
@@ -2940,6 +3191,14 @@ in_body_start_document(TB *tb, FTok *t)
         tb_push(tb, insert_el(tb, t));
         tb->mode = M_IN_TABLE;
         return;
+    case TAG_svg: case TAG_math: {
+        reconstruct(tb, tb_current(tb));
+        if (!in_template) ensure_body(tb);
+        FNode *n = new_foreign(tb, t, tag == TAG_svg ? NS_SVG : NS_MATHML);
+        append_child(tb, tb_current(tb), n);
+        if (!t->self_closing) tb_push(tb, n);
+        return;
+    }
     case TAG_applet: case TAG_marquee: case TAG_object: {
         if (!in_template) ensure_body(tb);
         FNode *n = insert_el(tb, t);
@@ -3003,6 +3262,13 @@ in_body_start_fragment(TB *tb, FTok *t)
         tb_push(tb, insert_el(tb, t));
         tb->mode = M_IN_SELECT;
         return;
+    case TAG_svg: case TAG_math: {
+        reconstruct(tb, tb_current(tb));
+        FNode *n = new_foreign(tb, t, tag == TAG_svg ? NS_SVG : NS_MATHML);
+        append_child(tb, tb_current(tb), n);
+        if (!t->self_closing) tb_push(tb, n);
+        return;
+    }
     case TAG_template: {
         FNode *tmpl = create_template(tb, t->attrs);
         append_child(tb, tb_current(tb), tmpl);
@@ -3125,12 +3391,76 @@ noscript_mode(TB *tb, FTok *t)
     return A_BREAK;
 }
 
-/* -- shared pre-switch blocks (TreeBuilder._pre_switch; the foreign
-      block cannot fire: no foreign element is ever created) -- */
+/* -- foreign content (TreeBuilder._process_foreign) with the current
+      node `acn` foreign: the action, or A_NONE when the token goes on
+      to the insertion mode -- */
+
+static int
+process_foreign(TB *tb, FNode *acn, FTok *t)
+{
+    if ((acn->fk & FK_TEXT_IP)
+            && ((t->type == T_START && t->tag != TAG_mglyph
+                 && t->tag != TAG_malignmark && t->tag != TAG_svg
+                 && t->tag != TAG_math)
+                || t->type == T_CHAR))
+        return A_NONE;
+    if ((acn->fk & FK_HTML_IP) && (t->type == T_START || t->type == T_CHAR))
+        return A_NONE;
+    switch (t->type) {
+    case T_CHAR:
+        if (t->data && PyUnicode_GET_LENGTH(t->data))
+            insert_text(tb, acn, t->data);
+        return A_BREAK;
+    case T_COMMENT:
+        insert_comment(tb, acn);
+        return A_BREAK;
+    case T_START: {
+        if (HAS(t->tag, F_BREAKOUT)
+                || (t->tag == TAG_font && font_breakout(t->attrs))) {
+            /* pop to an HTML element or an integration point, then
+               the insertion mode takes the tag */
+            while (tb->nst) {
+                FNode *top = tb->st[tb->nst - 1];
+                if (top->ns == NS_HTML || (top->fk & (FK_TEXT_IP | FK_HTML_IP)))
+                    break;
+                tb_pop(tb);
+            }
+            return A_REPROCESS;
+        }
+        FNode *n = new_foreign(tb, t, acn->ns);
+        append_child(tb, acn, n);
+        if (!t->self_closing) tb_push(tb, n);
+        return A_BREAK;
+    }
+    case T_END:
+        /* pop through the nearest open element of that name (SVG names
+           compared case-insensitively); an HTML element in between
+           hands the tag to the insertion mode */
+        for (int i = tb->nst - 1; i >= 0; i--) {
+            FNode *e = tb->st[i];
+            if (e->ns == NS_SVG ? ascii_ieq(e->name, t->name)
+                                : name_is(e, t->tag, t->name)) {
+                while (tb->nst > i) tb_pop(tb);
+                return A_BREAK;
+            }
+            if (e->ns == NS_HTML) return A_NONE;
+        }
+        return A_BREAK;
+    default:
+        return A_NONE;
+    }
+}
+
+/* -- shared pre-switch blocks (TreeBuilder._pre_switch) -- */
 
 static int
 pre_switch(TB *tb, FTok *t)
 {
+    FNode *acn = tb_top(tb);
+    if (acn && acn->ns != NS_HTML) {
+        int act = process_foreign(tb, acn, t);
+        if (act != A_NONE) return act;
+    }
     int mode = tb->mode;
     if (mode == M_IN_TEMPLATE) {
         int act = handle_in_template(tb, t);
@@ -4084,57 +4414,77 @@ dispatch_fragment(TB *tb, FTok *t)
 
 /* -- drive loop (TreeBuilder._run) -- */
 
+/* one token through the dispatcher, reprocessing included */
 static void
-tb_run(TB *tb, TokRec *recs, Py_ssize_t n)
+tb_step(TB *tb, FTok *t)
 {
-    int (*dispatch)(TB *, FTok *) =
-        tb->fragment ? dispatch_fragment : dispatch_document;
-    Py_ssize_t i = 0;
-    for (;;) {
-        FTok t = {T_EOF, TAG_OTHER, NULL, NULL, NULL, 0, NULL};
-        if (i < n) {
-            TokRec *r = &recs[i++];
-            if (r->errs) {
-                /* tokenizer-side errors surface at pull time, before
-                   the builder sees the token (FastFeed_next) */
-                Py_ssize_t m = PyList_GET_SIZE(r->errs);
-                tb->errs = tb_grow(tb, tb->errs, &tb->cap_errs,
-                                   tb->n_errs + m, sizeof(PyObject *));
-                for (Py_ssize_t k = 0; k < m; k++)
-                    tb->errs[tb->n_errs++] = PyList_GET_ITEM(r->errs, k);
-            }
-            t.type = r->type;
-            t.name = r->name;
-            t.data = r->data;
-            t.attrs = r->attrs;
-            t.self_closing = r->self_closing;
-            t.rec = r;
-            tb->tz_state = r->state_after;
-            if (t.type == T_START || t.type == T_END) {
-                t.tag = tag_of(r->name);
-                if (t.type == T_START) {
-                    if (t.tag == TAG_svg || t.tag == TAG_math)
-                        tb_fail(tb, "tree-foreign");
-                    if (t.tag == TAG_frameset)
-                        tb_fail(tb, "tree-frameset");
-                }
-            }
+    int act = tb->dispatch(tb, t);
+    while (act == A_REPROCESS) act = tb->dispatch(tb, t);
+    if (act == A_CHECK) {
+        /* MODE_TEXT entry after a start tag */
+        if (t->type == T_START && tb->mode != M_TEXT
+                && (tb->tz_state == S_RCDATA || tb->tz_state == S_RAWTEXT
+                    || tb->tz_state == S_SCRIPT)) {
+            tb->original_mode = tb->mode;
+            tb->mode = M_TEXT;
         }
-        int act = dispatch(tb, &t);
-        while (act == A_REPROCESS) act = dispatch(tb, &t);
-        if (act == A_CHECK) {
-            /* MODE_TEXT entry after a start tag */
-            if (t.type == T_START && tb->mode != M_TEXT
-                    && (tb->tz_state == S_RCDATA
-                        || tb->tz_state == S_RAWTEXT
-                        || tb->tz_state == S_SCRIPT)) {
-                tb->original_mode = tb->mode;
-                tb->mode = M_TEXT;
-            }
-        } else if (act == A_STOP) {
-            return;
-        }
+    } else if (act == A_STOP) {
+        tb->stopped = 1;
     }
+}
+
+/* dispatch the records scanned since the last call (stops with the
+   loop: the Python tokenizer is never asked for the rest) */
+static void
+tb_feed(TB *tb)
+{
+    while (tb->fed < tb->sc.rb.n && !tb->stopped) {
+        TokRec *r = &tb->sc.rb.recs[tb->fed++];
+        if (r->errs) {
+            /* tokenizer-side errors surface at pull time, before the
+               builder sees the token (FastFeed_next) */
+            Py_ssize_t m = PyList_GET_SIZE(r->errs);
+            tb->errs = tb_grow(tb, tb->errs, &tb->cap_errs,
+                               tb->n_errs + m, sizeof(PyObject *));
+            for (Py_ssize_t k = 0; k < m; k++)
+                tb->errs[tb->n_errs++] = PyList_GET_ITEM(r->errs, k);
+        }
+        FTok t = {r->type, TAG_OTHER, r->name, r->data, r->attrs,
+                  r->self_closing, r};
+        tb->tz_state = r->state_after;
+        if (t.type == T_START || t.type == T_END) {
+            t.tag = tag_of(r->name);
+            if (t.type == T_START && t.tag == TAG_frameset)
+                tb_fail(tb, "tree-frameset");
+        }
+        tb_step(tb, &t);
+    }
+}
+
+/* Scan and build together: the scanner stops at each CDATA opener and
+   the builder, having taken every token before it, answers allow_cdata
+   as TreeBuilder._run does (stack top present and not HTML).  Returns
+   0 when the input is consumed or the loop stopped, 1 on a scanner
+   bail, -1 on a python error. */
+static int
+tb_run(TB *tb)
+{
+    Scan *sc = &tb->sc;
+    sc->pause_cdata = 1;
+    for (;;) {
+        int rc = scan_all(sc);
+        if (rc == 1 || rc < 0) return rc;
+        tb_feed(tb);
+        if (tb->stopped) return 0;
+        if (rc == 0) break;
+        FNode *top = tb_top(tb);
+        if (scan_cdata(sc, top && top->ns != NS_HTML) < 0) return -1;
+    }
+    while (!tb->stopped) {
+        FTok t = {T_EOF, TAG_OTHER, NULL, NULL, NULL, 0, NULL};
+        tb_step(tb, &t);
+    }
+    return 0;
 }
 
 /* the end of build_document / build_fragment: clear the stack, adopt
@@ -4293,10 +4643,48 @@ context_supported(PyObject *ctx)
     return 1;
 }
 
+/* the build proper: the extraction, or NULL (tb->scan_rc == 1 after a
+   scanner bail, else a python error) */
+static PyObject *
+fused_run(TB *tb, PyObject *doc_mode_fn, int document, PyObject *context,
+          PyObject *errors)
+{
+    int use_ctx = !document && context != Py_None
+        && PyUnicode_GET_LENGTH(context) > 0;
+    if (use_ctx && !context_supported(context))
+        tb_fail(tb, "tree-context");
+    tb->dispatch = document ? dispatch_document : dispatch_fragment;
+    tb->doc_mode_fn = doc_mode_fn;
+    tb->doc = new_node(tb, N_DOCUMENT);
+    tb->mode = tb->original_mode = document ? M_INITIAL : M_IN_BODY;
+    if (use_ctx) {
+        tb->context = new_element(tb, tag_of(context), context, NULL);
+        tb_push(tb, tb->context);
+    }
+    int rc = tb_run(tb);
+    if (rc) {
+        tb->scan_rc = rc;
+        return NULL;
+    }
+    tb_finish(tb);
+    PyObject *result = tb_extract(tb);
+    if (result) {
+        for (Py_ssize_t k = 0; k < tb->n_errs; k++) {
+            if (PyList_Append(errors, tb->errs[k]) < 0) {
+                Py_CLEAR(result);
+                break;
+            }
+        }
+    }
+    return result;
+}
+
 /* fused_build(text, errors, decode_fn, doc_mode_fn, document, context)
    -> (extracted_text, spans, node_count) with the error texts appended
    to `errors`; a FastFeed over the same records when the tree builder
-   bails; None when the scanner bails.  bail_reason() names the bail. */
+   bails (the rest of the input is scanned as make_feed would); None
+   when the scanner bails, also while scanning for that hand-over.
+   bail_reason() names the bail. */
 static PyObject *
 fused_build(PyObject *Py_UNUSED(mod), PyObject *args)
 {
@@ -4312,55 +4700,33 @@ fused_build(PyObject *Py_UNUSED(mod), PyObject *args)
         PyErr_SetString(PyExc_TypeError, "context must be str or None");
         return NULL;
     }
-    Scan sc;
-    int rc = scan_text(&sc, text, decode_fn);
-    if (rc < 0) return NULL;
-    if (rc > 0) {
-        last_bail = sc.bail;
-        Py_RETURN_NONE;
-    }
-
     TB *tb = PyMem_Calloc(1, sizeof(TB));
-    if (!tb) {
-        recbuf_clear(&sc.rb);
-        PyMem_Free(sc.skips);
-        return PyErr_NoMemory();
-    }
+    if (!tb) return PyErr_NoMemory();
+    Scan *sc = &tb->sc;
     PyObject *volatile result = NULL;
-    if (setjmp(tb->fail) == 0) {
-        int use_ctx = !document && context != Py_None
-            && PyUnicode_GET_LENGTH(context) > 0;
-        if (use_ctx && !context_supported(context))
-            tb_fail(tb, "tree-context");
-        tb->fragment = !document;
-        tb->doc_mode_fn = doc_mode_fn;
-        tb->doc = new_node(tb, N_DOCUMENT);
-        tb->mode = tb->original_mode = document ? M_INITIAL : M_IN_BODY;
-        if (use_ctx) {
-            tb->context = new_element(tb, tag_of(context), context, NULL);
-            tb_push(tb, tb->context);
+    int keep = 0;
+    int rc = scan_begin(sc, text, decode_fn);
+    if (rc == 0) {
+        if (setjmp(tb->fail) == 0)
+            result = fused_run(tb, doc_mode_fn, document, context, errors);
+        if (tb->bail) {
+            /* tree bail: scan the rest with no builder, then hand the
+               records to the Python builder */
+            sc->pause_cdata = 0;
+            rc = scan_all(sc);
+            last_bail = tb->bail;
+            keep = rc == 0;
+        } else if (!result) {
+            rc = tb->scan_rc == 1 ? 1 : -1;
         }
-        tb_run(tb, sc.rb.recs, sc.rb.n);
-        tb_finish(tb);
-        result = tb_extract(tb);
-        if (result) {
-            for (Py_ssize_t k = 0; k < tb->n_errs; k++) {
-                if (PyList_Append(errors, tb->errs[k]) < 0) {
-                    Py_CLEAR(result);
-                    break;
-                }
-            }
-        }
-    } else if (tb->bail) {
-        last_bail = tb->bail;
     }
+    if (rc == 1) last_bail = sc->bail;
     tb_free(tb);
+    scan_end(sc, keep);
+    if (keep) result = feed_from_scan(sc, text, errors);
     PyMem_Free(tb);
-    if (last_bail)   /* hand the records to the Python builder */
-        return feed_from_scan(&sc, text, errors);
-    recbuf_clear(&sc.rb);
-    PyMem_Free(sc.skips);
-    return result;
+    if (rc == 1) Py_RETURN_NONE;
+    return rc < 0 ? NULL : result;
 }
 
 /* tag table, tag-set flags and constant strings for the fused builder */
@@ -4409,7 +4775,23 @@ fused_init(void)
     KEY_START = PyUnicode_InternFromString("start");
     KEY_END = PyUnicode_InternFromString("end");
     KEY_PATH = PyUnicode_InternFromString("path");
-    return (KEY_START && KEY_END && KEY_PATH) ? 0 : -1;
+    KEY_ENCODING = PyUnicode_InternFromString("encoding");
+    NAME_FOREIGN_OBJECT = PyUnicode_InternFromString("foreignObject");
+    NAME_ANNOTATION_XML = PyUnicode_InternFromString("annotation-xml");
+    SVG_NAMES = PyDict_New();
+    if (!KEY_START || !KEY_END || !KEY_PATH || !KEY_ENCODING
+            || !NAME_FOREIGN_OBJECT || !NAME_ANNOTATION_XML || !SVG_NAMES)
+        return -1;
+    for (int k = 0; SVG_NAME_PAIRS[k]; k += 2) {
+        PyObject *adj = PyUnicode_InternFromString(SVG_NAME_PAIRS[k + 1]);
+        if (!adj || PyDict_SetItemString(SVG_NAMES, SVG_NAME_PAIRS[k],
+                                         adj) < 0) {
+            Py_XDECREF(adj);
+            return -1;
+        }
+        Py_DECREF(adj);
+    }
+    return 0;
 }
 
 /* ------------------------------------------------------------------ */

@@ -8,16 +8,18 @@ when the document lies in the provably-token-identical subset, else
 None and the caller uses the pure-Python tokenizer.  See the C file's
 header comment for the exact subset contract.
 
-`fused_extract` scans and then builds the tree in C as well, returning
-the extraction directly (udfs.parse_turn's markup path uses it).  The
-fused subset is every scanner-accepted input except: <svg>/<math>
-start tags (foreign content), a document-mode IN_HEAD <meta> (the
-re-encode handshake), <frameset>, and fragment contexts whose Python
-build does not start in IN_BODY.  On those it hands the scanned
-records back as a FastFeed for the Python builder.  The Python builder
-is kept because it is the only path for those inputs and for scanner
-bails, and it is the oracle the differential tests and perfbench's
-HP_FASTSCAN=0 run compare against.
+`fused_extract` scans and builds the tree in C as well, returning the
+extraction directly (udfs.parse_turn's markup path uses it).  Its
+builder covers foreign content (SVG/MathML) too and answers the one
+builder-to-tokenizer question, allow_cdata at a "<![CDATA[" opener,
+itself, so it needs no CDATA gate and scans each input once.  The
+fused subset is every scanner-accepted input except: a document-mode
+IN_HEAD <meta> (the re-encode handshake), <frameset>, and fragment
+contexts whose Python build does not start in IN_BODY.  On those it
+hands the scanned records back as a FastFeed for the Python builder.
+The Python builder is kept because it is the only path for those
+inputs and for scanner bails, and it is the oracle the differential
+tests and perfbench's HP_FASTSCAN=0 run compare against.
 
 Build strategy (no Cython/mypyc in this environment; plain cc + the
 CPython headers suffice): compile on first use into a content-hashed
@@ -143,21 +145,14 @@ _last_bail: str | None = None
 
 
 def _gate(input_text: str, context_tag: str | None) -> str | None:
-    """make_feed's Python-side gates: the reason an input never reaches
-    the C scanner, or None."""
+    """The Python-side gates of make_feed and fused_extract: the reason
+    an input never reaches the C scanner, or None."""
     if _load() is None:
         return "unavailable"
     if not input_text:
         return "empty-input"
     if context_tag and context_tag[:31].lower() in _NON_DATA_CONTEXTS:
         return "gate-raw-context"
-    if context_tag and "<![CDATA[" in input_text:
-        # allow_cdata (builder feedback) can be true from the first
-        # token in a foreign-namespace fragment context; the scanner's
-        # seen_foreign gate only covers the document path, so any
-        # context + a case-exact CDATA opener stays on the Python
-        # tokenizer
-        return "gate-fragment-cdata"
     return None
 
 
@@ -166,6 +161,11 @@ def make_feed(input_text: str, errors: list, context_tag: str | None = None):
     tokenizer.  Safe default for every input: bails are silent."""
     global _last_bail
     _last_bail = _gate(input_text, context_tag)
+    if _last_bail is None and context_tag and "<![CDATA[" in input_text:
+        # a feed cannot ask the builder for allow_cdata; kept as the
+        # conservative gate for fragments (fused_extract needs none:
+        # its builder answers every CDATA opener)
+        _last_bail = "gate-fragment-cdata"
     if _last_bail is not None:
         return None
     # the scanner delegates charref-bearing regions to the SAME decode
@@ -192,12 +192,13 @@ def fused_extract(input_text: str, errors: list,
     builder's tree.  document=True is parse_document's str path (UTF-8,
     tentative confidence); else a fragment in ``context_tag``.
 
-    When the tree builder bails (see the C header: foreign content,
-    <frameset>, an IN_HEAD <meta>, a non-IN_BODY fragment context) the
-    result is the FastFeed over the records already scanned, for
+    When the tree builder bails (see the C header: <frameset>, an
+    IN_HEAD <meta>, a non-IN_BODY fragment context) the result is the
+    FastFeed over the records already scanned, for
     build_document/build_fragment(feed=...); None when the scanner
-    itself bails or a gate applies (use the Python tokenizer).
-    bail_reason() names the bail."""
+    itself bails, also while scanning the rest for that hand-over, or
+    a gate applies (use the Python tokenizer).  bail_reason() names
+    the bail."""
     global _last_bail
     _last_bail = _gate(input_text, context_tag)
     if _last_bail is not None:
@@ -214,8 +215,8 @@ def fused_extract(input_text: str, errors: list,
 def bail_reason() -> str | None:
     """Reason the most recent make_feed()/fused_extract() call did not
     run its whole input in C, None after an accepted call: a gate
-    (unavailable, empty-input, gate-raw-context, gate-fragment-cdata),
-    a scanner bail, "error" (make_feed's C call raised), or a
-    fused-builder bail (tree-foreign, tree-meta, tree-frameset,
+    (unavailable, empty-input, gate-raw-context, and for make_feed
+    only gate-fragment-cdata), a scanner bail, "error" (make_feed's C call
+    raised), or a fused-builder bail (tree-meta, tree-frameset,
     tree-context, tree-internal)."""
     return _last_bail

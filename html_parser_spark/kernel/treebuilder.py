@@ -1310,19 +1310,13 @@ class TreeBuilder:
         st = self.st
         acn = st[-1] if st else None
         if acn is not None and acn.ns != NS_HTML:
+            # the reference also undoes the tokenizer's RCDATA switch
+            # for an SVG <title> consumed here (2981-2989); "title" is
+            # in BREAKOUT_TAGS, so it always reprocesses and the undo
+            # cannot run (tests/test_fastscan.py pins that every raw
+            # tag breaks out — the C scanner relies on it)
             consumed, fc_reprocess = self._process_foreign(t)
             if consumed:
-                if (
-                    t.type == TOKEN_START_TAG
-                    and t.name is not None
-                    and acn.ns == NS_SVG
-                    and t.name == "title"
-                    and not fc_reprocess
-                ):
-                    # undo the tokenizer's RCDATA switch for SVG <title>
-                    # (2981-2989)
-                    self.tz.state = 0  # DATA
-                    self.tz.raw_tag = ""
                 return _REPROCESS if fc_reprocess else _BREAK
 
         mode = self.mode
@@ -2539,11 +2533,11 @@ class _TokenFeed:
     the REAL tokenizer would have self-switched into for that start
     tag's name — the same 8-tag set triggers_text_mode matches — so
     the existing _run/_dispatch_document state reads behave per the C
-    from-tokens rules. Builder feedback writes (allow_cdata, the SVG
-    <title> state undo) land on instance attrs and are inert, which
-    is the from-tokens contract: tokens are already made, feedback
-    paths cannot retokenize (the reference documents the same caveat
-    — spec parity holds exactly when those paths don't trigger)."""
+    from-tokens rules. The builder feedback (allow_cdata) is never
+    written to a feed, which is the from-tokens contract: tokens are
+    already made, feedback paths cannot retokenize (the reference
+    documents the same caveat — spec parity holds exactly when those
+    paths don't trigger)."""
 
     __slots__ = ("_tokens", "_i", "state", "raw_tag", "allow_cdata",
                  "errors", "skipped")
@@ -2598,10 +2592,9 @@ def build_document_from_tokens(tokens, errors=None):
     token array. No encoding is stamped on the document and no
     §13.2.3.5 re-encode handshake can occur (there is no input to
     re-decode); tokenizer<->builder feedback (foreign-content CDATA
-    gating, SVG-title RCDATA undo) cannot retokenize — parity with
-    the full parser holds exactly when those paths don't trigger,
-    the same caveat the reference's API carries. Returns
-    (doc, errors)."""
+    gating) cannot retokenize — parity with the full parser holds
+    exactly when those paths don't trigger, the same caveat the
+    reference's API carries. Returns (doc, errors)."""
     tb = TreeBuilder(None, 2, errors)
     tb.want_change_encoding = False
     tb.from_tokens = True

@@ -210,7 +210,15 @@ def minhash_signatures(documents: DataFrame, num_hashes: int = 32,
     signatures are now computed where the shingles are, and the first
     shuffle in the whole LSH pipeline is the band-bucket groupBy.
     SQL-string exprs: one parse each instead of ~4 py4j round trips
-    per column (driver-side build time, not executor time)."""
+    per column (driver-side build time, not executor time).
+
+    Precondition: doc_id is unique per row. The per-row form emits one
+    signature per input row, so rows sharing a doc_id get separate
+    signatures under that one id (the r7 groupBy form merged their
+    shingles into one), and every consumer keyed by doc_id — LSH
+    buckets, candidate pairs — sees them as one document. Deduplicate
+    upstream (dropDuplicates("doc_id")) when the input does not
+    guarantee it."""
     sh = shingle_hashes(documents, shingle_n)
     mins = ", ".join(
         f"array_min(transform(sh_hashes, h -> xxhash64(h, {k})))"
@@ -3533,14 +3541,23 @@ def strip_dup_passages(documents: DataFrame, n: int = 8) -> DataFrame:
         starts.join(dup_keys, "gkey")
         .groupBy("doc_id")
         .agg(F.collect_list("start").alias("sts"))
-        .select("doc_id", F.array_distinct(F.expr(
+        .select("doc_id", F.array_sort(F.array_distinct(F.expr(
             f"flatten(transform(sts, s -> sequence(s, s + {n - 1})))"
-        )).alias("cov"))
+        ))).alias("cov"))
     )
-    joined = spine.join(per_doc_cov, "doc_id", "left")
-    cov = F.coalesce(F.col("cov"), F.expr("array()").cast("array<int>"))
-    kept_words = F.filter(
-        F.col("w"), lambda x, i: ~F.array_contains(cov, i))
+    joined = spine.join(per_doc_cov, "doc_id", "left").withColumn(
+        "cov", F.coalesce(F.col("cov"), F.expr("array()").cast("array<int>")))
+    # the covered mask, built once per document in O(words): each
+    # covered position (ascending, distinct) adds the uncovered run
+    # before it and itself, then the tail pads to the word count.
+    # zip_with takes it as an argument, so it is evaluated once per
+    # row, not once per word as a lookup inside the lambda would be.
+    kept_words = F.expr(
+        "filter(zip_with(w, concat(flatten(transform(cov, (p, j) -> "
+        "concat(array_repeat(false, p - IF(j = 0, 0, cov[j - 1] + 1)), "
+        "array(true)))), array_repeat(false, size(w) - IF(size(cov) = 0, "
+        "0, cov[size(cov) - 1] + 1))), (x, c) -> IF(c, NULL, x)), "
+        "x -> x IS NOT NULL)")
     return joined.select(
         "doc_id",
         F.array_join(kept_words, " ").alias("clean_text"),

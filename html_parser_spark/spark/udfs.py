@@ -16,10 +16,10 @@ it against the full parse.
 
 Markup turns (non-boilerplate) go to the fused C scan + tree build
 (kernel/fastscan.fused_extract, kernel/_fastscan.c), which returns the
-extraction without building Python nodes. Inputs outside its subset —
-scanner bails, foreign content, a document <meta> in head, <frameset>,
-fragment contexts not starting in IN_BODY — take the Python tree
-builder, which stays as that fallback and as the reference the
+extraction without building Python nodes, foreign content (SVG/MathML)
+and CDATA sections included. Inputs outside its subset — scanner
+bails, a document <meta> in head, <frameset>, fragment contexts not
+starting in IN_BODY — take the Python tree builder, which stays as that fallback and as the reference the
 differential tests compare against; the choice depends on the input
 alone. HP_FASTSCAN=0 turns off the scanner and the fused builder.
 """

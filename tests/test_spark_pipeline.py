@@ -2471,6 +2471,54 @@ def test_strip_dup_passages_hand_built(spark):
     assert got2[0] == ("", 9) and got2[1] == ("", 9)
 
 
+def test_strip_dup_passages_overlapping_passages(spark):
+    """Pins strip_dup_passages on documents whose duplicated passages
+    overlap, abut, repeat inside one document and sit at both ends,
+    against a direct Python statement of the rule: a word goes when an
+    n-gram covering it occurs in at least one other document."""
+    import random
+
+    from html_parser_spark.spark.ops import strip_dup_passages
+
+    n = 4
+    rng = random.Random(3)
+    vocab = [f"w{k}" for k in range(12)]
+    p1 = "a b c d e f"
+    p2 = "d e f g h"                      # overlaps p1's tail
+    texts = [
+        f"{p1} x y {p2}",
+        f"{p2} {p1}",
+        f"q {p1} {p1} r",                 # p1 twice in one document
+        "a b c d x e f g h",
+        f"{p2}",
+        "solo words only here",
+        "a b c",                          # shorter than n
+    ] + [" ".join(rng.choice(vocab) for _ in range(rng.randint(3, 40)))
+         for _ in range(25)]
+    docs = spark.createDataFrame(list(enumerate(texts)),
+                                 "doc_id long, text string")
+
+    grams = {}
+    for d, t in enumerate(texts):
+        w = t.split(" ")
+        for s in range(len(w) - n + 1):
+            grams.setdefault(tuple(w[s:s + n]), set()).add(d)
+    want = {}
+    for d, t in enumerate(texts):
+        w = t.split(" ")
+        cov = set()
+        for s in range(len(w) - n + 1):
+            if len(grams[tuple(w[s:s + n])]) >= 2:
+                cov.update(range(s, s + n))
+        kept = [x for i, x in enumerate(w) if i not in cov]
+        want[d] = (" ".join(kept), len(w), len(w) - len(kept))
+    got = {r.doc_id: (r.clean_text, r.n_words, r.n_removed)
+           for r in strip_dup_passages(docs, n=n).collect()}
+    assert got == want
+    assert got[0] == ("x y", 13, 11) and got[2] == ("q r", 14, 12)
+    assert got[5][2] == 0 and got[6] == ("a b c", 3, 0)
+
+
 def test_edit_distance_pairs_hand_built(spark):
     """Levenshtein verify on the near-dup pair set: exact distance on
     an ASCII pair, NULL + ascii_only=false on a CJK pair (where Spark

@@ -371,12 +371,12 @@ def main():
         # r8: the anti-join of exploded covered positions was replaced
         # by per-doc array math — covered starts come back as ONE
         # aggregated array per doc and the kept-word filter is a
-        # per-row HOF (filter-with-index), so the invariant is now:
-        # a LEFT join of the per-doc cover frame and NO
-        # corpus-token-scale Generate-join pattern
+        # per-row HOF (zip_with over a covered mask built once per
+        # doc), so the invariant is now: a LEFT join of the per-doc
+        # cover frame and NO corpus-token-scale Generate-join pattern
         ("cover attach is a keyed left join; rebuild is per-row "
          "array math (no token-level anti join needed)",
-         lambda p: "LeftOuter" in p and "array_contains" in p),
+         lambda p: "LeftOuter" in p and "zip_with" in p),
         ("doc-frequency aggregation is partial",
          lambda p: p.count("HashAggregate") >= 2),
     ])

@@ -380,12 +380,14 @@ def interleave_campaign(n: int, seed: int, gen_fn) -> int:
     return 1 if fails else 0
 
 
-def fused_campaign(n: int, seed: int, gen_fn) -> int:
+def fused_campaign(n: int, seed: int, gen_fn) -> tuple:
     """Python-vs-fused differential (--fused): the 6-tuple
     udfs.parse_turn returns with the accelerator on must equal the one
     with it off (the HP_FASTSCAN=0 kernel), in document mode and in a
     random CONTEXTS fragment per case. Prints how many parses the fused
-    builder took whole and the bail reasons of the rest."""
+    builder took whole and the bail reasons of the rest; returns
+    (mismatches, Counter of bail reasons with "accepted" for the parses
+    built in C)."""
     import collections
     import tempfile
 
@@ -437,10 +439,10 @@ def fused_campaign(n: int, seed: int, gen_fn) -> int:
                 break
         if fails >= 10:
             break
-    accepted = reasons.pop("accepted", 0)
+    bails = {r: k for r, k in reasons.most_common() if r != "accepted"}
     print(f"{n} cases ({parses} parses), {fails} mismatches (seed={seed}, "
-          f"fused); built in C {accepted}; bails {dict(reasons.most_common())}")
-    return 1 if fails else 0
+          f"fused); built in C {reasons['accepted']}; bails {bails}")
+    return fails, reasons
 
 
 def main():
@@ -481,7 +483,8 @@ def main():
     if "--interleave" in sys.argv:
         return interleave_campaign(n, seed, gen_fn)
     if "--fused" in sys.argv:
-        return fused_campaign(n, seed, gen_fn)
+        fails, _ = fused_campaign(n, seed, gen_fn)
+        return 1 if fails else 0
     rng = random.Random(seed)
     fails = 0
     for i in range(n):
