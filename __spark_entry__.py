@@ -39,7 +39,10 @@ _ANN_QUERY_IDS = [0, 1, 2, 3, 4, 5, 6, 7, 8, 9]
 # the datasource + reads footers on every call, 30-60ms of driver
 # time per table per query build); every action on it still computes
 # from the parquet files. Keyed on applicationId so a restarted
-# session never serves a stale plan.
+# session never serves a stale plan. Precondition: the SF tables are
+# not rewritten in place within one application (the key carries no
+# file fingerprint, so the memoized plan would keep the old file
+# listing and schema).
 _TABLE_CACHE: dict = {}
 
 

@@ -2262,7 +2262,9 @@ _IVF_EXPR_MAX_VALUES = 4096
 _BF_ARROW_MIN_DIM = 256
 
 # (applicationId, input file set) -> embedding dimensionality; see the
-# method='auto' probe in ann_bruteforce
+# method='auto' probe in ann_bruteforce. Precondition: an input file is
+# not rewritten in place within one application (the key carries no
+# file fingerprint, so a rewritten file would keep its old dim).
 _BF_DIM_CACHE: dict = {}
 
 

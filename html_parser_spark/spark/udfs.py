@@ -221,9 +221,10 @@ def _fast_extract_boilerplate(text: str, mode: str, context: str):
 # context) re-parses are pure waste. Results are only serialized to
 # Arrow (never mutated), so sharing them is safe. A plain module dict
 # (not functools.lru_cache) so the mapInArrow closure stays picklable.
-# HP_PARSE_CACHE=0 disables; size via HP_PARSE_CACHE_SIZE.
-_CACHE_SIZE = int(os.environ.get("HP_PARSE_CACHE_SIZE", "4096"))
-_CACHE_ON = os.environ.get("HP_PARSE_CACHE", "1") != "0" and _CACHE_SIZE > 0
+# HP_PARSE_CACHE=0 disables it (the oracle runs that way); it holds
+# _CACHE_SIZE entries and is cleared when full.
+_CACHE_SIZE = 4096
+_CACHE_ON = os.environ.get("HP_PARSE_CACHE", "1") != "0"
 _PARSE_CACHE: dict = {}
 
 

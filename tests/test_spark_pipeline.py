@@ -65,9 +65,9 @@ def test_pipeline_matches_goldens(spark, refbuild, golden_cases):
 
 
 def test_pipeline_error_texts_match_goldens(spark, refbuild, golden_cases):
-    """Parse-error TEXTS through the real tiered extract_turns job must
-    equal the reference binaries' stderr (goldens), per turn — mixing
-    golden HTML (kernel tier) with plain turns (trivial JVM tier)."""
+    """Parse-error TEXTS through the real extract_turns job must equal
+    the reference binaries' stderr (goldens), per turn — mixing golden
+    HTML with plain turns (the kernel's '<'-free fast path)."""
     import datetime
 
     from html_parser_spark.spark.pipeline import extract_turns
@@ -81,8 +81,8 @@ def test_pipeline_error_texts_match_goldens(spark, refbuild, golden_cases):
         ("conv0", i, "user", text, None, datetime.datetime(2020, 1, 1))
         for i, (name, text, dump, errc) in enumerate(rows)
     ]
-    # trivial-tier rows interleaved: expected texts are the full
-    # parser's own output for each (the calibrated constants)
+    # '<'-free rows interleaved: expected texts are the full parser's
+    # own output for each
     from html_parser_spark.kernel.api import parse_fragment
 
     trivial = ["plain words", "", "   ", None]
@@ -102,7 +102,7 @@ def test_pipeline_error_texts_match_goldens(spark, refbuild, golden_cases):
     ).repartition(4)
     got = {
         (r.conv_id, r.turn_idx): list(r.parse_error_texts)
-        for r in extract_turns(df, ordered=False, single_scan=False)
+        for r in extract_turns(df, ordered=False)
         .select("conv_id", "turn_idx", "parse_error_texts").collect()
     }
     bad = []
@@ -326,45 +326,17 @@ def test_simhash_similar_docs_close(spark):
     assert hamming(rows[1], rows[2]) < hamming(rows[1], rows[3])
 
 
-def test_strategies_output_identical(spark):
-    """single_scan=True (1 FileScan) and the JVM tier split (2 scans)
-    must produce byte-identical results — the property that makes the
-    single-scan default safe."""
-    from html_parser_spark.spark.pipeline import extract_turns
-    from html_parser_spark.spark.transcripts import transcripts_df
-
-    df = transcripts_df(spark, 400, seed=11, partitions=4)
-
-    def canon(q):
-        return sorted(
-            (r.conv_id, r.turn_idx, r.extracted_text,
-             tuple((s.start, s.end, s.path) for s in r.spans),
-             r.parse_errors, r.node_count, r.doc_encoding,
-             tuple(r.parse_error_texts))
-            for r in q.collect())
-
-    a = canon(extract_turns(df, ordered=False, single_scan=True))
-    b = canon(extract_turns(df, ordered=False, single_scan=False))
-    assert a == b
-    # and the plans genuinely differ in scan count
-    p1 = extract_turns(df, ordered=False, single_scan=True)
-    p2 = extract_turns(df, ordered=False, single_scan=False)
-    s1 = p1._jdf.queryExecution().executedPlan().toString()
-    s2 = p2._jdf.queryExecution().executedPlan().toString()
-    assert "Union" not in s1 and "Union" in s2
-
-
-def test_fastpath_plan_stays_jvm(spark):
-    """The trivial tier must not contain a Python/Arrow eval node and
-    the parquet scan must prune columns."""
+def test_extract_plan_one_scan(spark):
+    """The default extraction plan reads its input once and crosses into
+    Python exactly once: one MapInArrow, no Union, no EvalPython."""
     from html_parser_spark.spark.pipeline import extract_turns
     from html_parser_spark.spark.transcripts import transcripts_df
 
     df = transcripts_df(spark, 100, seed=3, partitions=2)
-    out = extract_turns(df, ordered=False, single_scan=False)
+    out = extract_turns(df, ordered=False)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    # exactly one Arrow eval (the hard tier), none in the trivial tier
-    assert plan.count("ArrowEvalPython") <= 1 or "MapInArrow" in plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Union" not in plan and "EvalPython" not in plan, plan
 
 
 def test_ann_lsh_build_runs_no_job(spark):

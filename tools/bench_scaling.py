@@ -146,8 +146,8 @@ Reference single-node baseline (BASELINE.md): 9.77 MB/s single-thread
 parse throughput. bench.py at local[32] (sf0.1, full-materialization
 noop sink) records the authoritative mixed-corpus turns/sec and dense-
 HTML MB/s per round in BENCH_r*.json — the latest committed
-BENCH_r*.json is the judged record — with the tiered fast path
-keeping markup-free turns entirely JVM-side. (The scaling
+BENCH_r*.json is the judged record — with the kernel's '<'-free fast
+path answering markup-free turns. (The scaling
 table above amplifies the corpus 32x and caches it, so its absolute
 turns/sec are not comparable with bench.py's cold-scan numbers.)
 
